@@ -21,7 +21,7 @@ versioned store into that layout:
   table);
 * ``drop_partitions`` mints a new parent version WITHOUT the named
   partitions — O(1), no data touched; older parent versions still
-  time-travel to them until ``expire`` physically reclaims generations
+  time-travel to them until ``gc`` physically reclaims generations
   no retained parent version references;
 * late data for a dropped partition starts a FRESH generation (a new
   sub-store): resurrecting the old store would silently un-delete every
@@ -54,8 +54,14 @@ import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from qin_cdc_spark.streaming.versioned import VersionedBucketedTable
+from qin_cdc_spark.cdc.apply import latest_by_key
+from qin_cdc_spark.streaming.cdc_stream import _align_to_incoming
+from qin_cdc_spark.streaming.versioned import (
+    VersionedBucketedTable,
+    _nullable_schema,
+)
 
 PART_META_NAME = "_partitioned_meta.json"
 _SAFE_PART = re.compile(r"^[A-Za-z0-9_.\-]+$")
@@ -175,34 +181,26 @@ class PartitionedVersionedTable:
         batch_id: int | None = None,
     ) -> int:
         """LWW-merge a change batch, split by partition value, as one
-        new PARENT snapshot.  Each partition slice merges into its own
-        sub-store (touched-bucket cost, independent batch guard); the
-        parent manifest records the consistent {partition → sub-version}
-        map in one atomic flip AFTER every slice landed.  A crash
-        mid-way replays safely: sub-store guards no-op the landed
-        slices, the parent publish completes the batch."""
+        new PARENT snapshot.
+
+        ONE probe job collects the batch's (partition, bucket) pairs.
+        The slices then land in groups — one per (sub-store bucket
+        count, merged column set, stored schema) — and each group is
+        ONE scan + ``latest_by_key`` + ``partitionBy(_part, _bucket)``
+        write, after which every sub-store of the group adopts its
+        staged bucket dirs by manifest math (``_mint_version``) and runs
+        its auto-rebucket policy.  The steady-state batch is one group:
+        probe + one write, however many partitions it touches (at sf0.1
+        each extra Spark action costs ~0.3-0.7 s of planning, commit
+        and py4j overhead).  The
+        parent manifest records the consistent {partition →
+        sub-version} map in one atomic flip AFTER every slice landed.
+        A crash mid-way replays safely: slices whose sub-store guard
+        already holds the batch keep their version, the rest land
+        again, the parent publish completes the batch."""
         meta = self._meta()
         if batch_id is not None and batch_id <= meta["last_batch_id"]:
             return meta["current"]
-        # ONE probe job computes the (partition, bucket) pairs for the
-        # whole batch (OPTIMIZATION_r10): each slice's touched-bucket
-        # set ships into its sub-merge, which then skips its own probe
-        # job.  The slices themselves land as ONE Spark action
-        # (OPTIMIZATION_r11, guide §1 per-action cost): every slice's
-        # merged frame is tagged with its partition value and the union
-        # writes once, partitioned by (_part, _bucket); each sub-store
-        # then adopts its staged bucket dirs by manifest math.  The
-        # per-batch action count drops from 1 + |partitions| to 2 —
-        # at sf0.1 each extra action costs ~0.3-0.7 s of planning/
-        # commit/py4j fixed overhead, and on a cluster the driver stops
-        # serializing |partitions| commits per refresh tick.
-        from qin_cdc_spark.cdc.apply import latest_by_key
-        from qin_cdc_spark.streaming.cdc_stream import _align_to_incoming
-        from qin_cdc_spark.streaming.versioned import (
-            VersionedBucketedTable,
-            _nullable_schema,
-        )
-
         proto = VersionedBucketedTable(
             self.spark, self.path, self.keys,
             n_buckets=self.n_buckets, **self.table_opts,
@@ -233,140 +231,97 @@ class PartitionedVersionedTable:
                 buckets_of.setdefault(p, []).append(b)
             cur_man = dict(meta["versions"].get(str(meta["current"]), {}))
             new_man = dict(cur_man)
+            incoming_all = proto._incoming_frame(
+                changes, op_col, seq_col, self.n_buckets
+            )
+            inc_cols = frozenset(f.name for f in incoming_all.schema.fields)
 
-            def _slice_gen(pv):
-                ent = cur_man.get(self._pstr(pv))
-                if ent is not None:
-                    return ent["gen"]
+            # Plan every slice DRIVER-side and group it.  Slices of
+            # different column vintages must not share a write (widening
+            # would give a sub-store columns it never had), nor slices of
+            # different bucket counts (a rebucketed sub-store).  A legacy
+            # sub-store without a recorded schema keys on its own name:
+            # it reads with mergeSchema, alone, and the version it mints
+            # records the schema.
+            groups: dict[tuple, list[dict]] = {}
+            for pv in pvals:
+                pstr = self._pstr(pv)
+                ent = cur_man.get(pstr)
                 # new partition — or one dropped earlier: a FRESH
                 # generation (resurrecting the old store would un-delete
                 # every dropped row).  Deterministic name ⇒ a replayed
-                # batch re-enters the same generation and no-ops on its
-                # sub batch guard.
-                return (
-                    f"g{batch_id}"
-                    if batch_id is not None
-                    else f"g-{uuid.uuid4().hex[:8]}"
-                )
-
-            def _merge_one(pv):
-                """Per-slice fallback: the sub-store runs its own merge
-                action (used for rebucketed subs, whose bucket space the
-                parent probe can't see, and for schema-heterogeneous
-                batches)."""
-                pstr = self._pstr(pv)
-                gen = _slice_gen(pv)
-                sub = self._sub(pstr, gen)
-                # the parent probe hashed in the PARENT's bucket space;
-                # a sub-store whose manifest was rebucketed away from it
-                # must re-probe itself (touched=None)
-                sub_man = sub._meta()["versions"].get(
-                    str(sub.current_version()), {"buckets": {}}
-                )
-                tb = (
-                    buckets_of[pv]
-                    if sub._manifest_n_buckets(sub_man) == self.n_buckets
-                    else None
-                )
-                sv = sub.merge(
-                    changes.filter(F.col(self.partition_col) == F.lit(pv)),
-                    op_col=op_col,
-                    seq_col=seq_col,
-                    batch_id=batch_id,
-                    touched=tb,
-                )
-                return pstr, {"gen": gen, "v": sv}
-
-            # Plan every slice DRIVER-side (no Spark plan building per
-            # slice), then land them all through ONE scan + ONE
-            # aggregation + ONE write: the partition column is immutable
-            # per key, so all slices' (current ∪ incoming) rows reduce
-            # in a single latest_by_key over (keys, _part, _bucket) —
-            # the union write's plan stays the size of one slice's, not
-            # |partitions|× (a first cut that unioned per-slice merge
-            # subtrees was measured SLOWER than the old threaded
-            # per-slice merges: the big plan's analysis/AQE cost on one
-            # driver thread ate the action savings).  Slices that can't
-            # join the shared write (rebucketed bucket space, replayed
-            # sub guard, divergent stored schema) peel off to the
-            # per-slice path.
-            plans: list[dict] = []
-            fallback: list = []
-            done: list[tuple] = []
-            shared_schema_json: list = []  # distinct stored-schema jsons
-            merged_colsets: set = set()
-            proto_nb = self.n_buckets
-            incoming_all = proto._incoming_frame(
-                changes, op_col, seq_col, proto_nb
-            )
-            inc_cols = {f.name for f in incoming_all.schema.fields}
-            for pv in pvals:
-                pstr = self._pstr(pv)
-                gen = _slice_gen(pv)
+                # batch re-enters the same generation.
+                if ent is not None:
+                    gen = ent["gen"]
+                elif batch_id is not None:
+                    gen = f"g{batch_id}"
+                else:
+                    gen = f"g-{uuid.uuid4().hex[:8]}"
                 sub = self._sub(pstr, gen)
                 sub_meta = sub._meta()
                 if batch_id is not None and batch_id <= sub_meta["last_batch_id"]:
                     # slice already landed by a crashed earlier attempt:
                     # keep its current version, recompute nothing
-                    done.append((pstr, {"gen": gen, "v": sub_meta["current"]}))
+                    new_man[pstr] = {"gen": gen, "v": sub_meta["current"]}
                     continue
                 scur = sub_meta["versions"].get(
                     str(sub_meta["current"]), {"buckets": {}}
                 )
-                snb = sub._manifest_n_buckets(scur)
-                if snb != self.n_buckets:
-                    fallback.append(pv)
-                    continue
-                if scur["buckets"] and scur.get("schema") is None:
-                    # legacy manifest without a recorded schema: its read
-                    # needs mergeSchema — per-slice path handles it
-                    fallback.append(pv)
-                    continue
-                tb = sorted({str(int(b)) for b in buckets_of[pv]}, key=int)
-                tb = sub._widen_touched_for_retype(incoming_all, scur, tb)
-                stored_cols = (
-                    {f["name"] for f in scur["schema"]["fields"]}
-                    if scur["buckets"]
-                    else set()
+                schema = scur.get("schema")
+                if not scur["buckets"]:
+                    cols, sj = inc_cols, None
+                elif schema is None:
+                    cols, sj = pstr, None
+                else:
+                    cols = inc_cols | {f["name"] for f in schema["fields"]}
+                    sj = json.dumps(schema, sort_keys=True)
+                key = (sub._manifest_n_buckets(scur), cols, sj)
+                groups.setdefault(key, []).append(
+                    {"pv": pv, "pstr": pstr, "gen": gen, "sub": sub,
+                     "sub_meta": sub_meta, "scur": scur}
                 )
-                if scur["buckets"]:
-                    sj = json.dumps(scur["schema"], sort_keys=True)
-                    if sj not in shared_schema_json:
-                        shared_schema_json.append(sj)
-                merged_colsets.add(frozenset(inc_cols | stored_cols))
-                plans.append(
-                    {
-                        "pstr": pstr, "pv": pv, "gen": gen, "sub": sub,
-                        "sub_meta": sub_meta, "scur": scur, "nb": snb,
-                        "touched": tb,
-                    }
+            # a slice with no stored rows (a new partition) has no schema
+            # to diverge from: it joins a group of its bucket count and
+            # column set
+            for key in [k for k in groups if k[2] is None]:
+                host = next(
+                    (h for h in groups if h[:2] == key[:2] and h[2]), None
                 )
-            if plans and (
-                len(plans) == 1
-                or len(shared_schema_json) > 1
-                or len(merged_colsets) > 1
-            ):
-                # a single slice writes just as cheaply through its own
-                # merge; schema-divergent slices (partitions born under
-                # different column vintages) must not share one write —
-                # widening would write columns a sub-store never had
-                for p in plans:
-                    # the planning pass memoized the retype probe on the
-                    # sub (p["touched"] is the widened set) — the
-                    # abandoned plan's sub.merge must re-probe, not skip
-                    # the widening off a memo its own merge never acted on
-                    p["sub"]._merge_sig = None
-                fallback.extend(p["pv"] for p in plans)
-                plans = []
-            if plans:
-                from pyspark.sql.types import StructType
+                if host is not None:
+                    groups[host] += groups.pop(key)
 
+            # Each group lands through ONE scan + ONE aggregation + ONE
+            # write: the partition column is immutable per key, so all
+            # slices' (current ∪ incoming) rows reduce in a single
+            # latest_by_key over (keys, _part, _bucket) — the write's plan
+            # stays the size of one slice's, not |partitions|× (a first
+            # cut that unioned per-slice merge subtrees was measured
+            # SLOWER than per-slice merges: the big plan's analysis/AQE
+            # cost on one driver thread ate the action savings).
+            for (nb, _, sj), plans in groups.items():
                 inc = incoming_all
+                if nb != self.n_buckets:
+                    inc = proto._incoming_frame(changes, op_col, seq_col, nb)
                 if len(plans) < len(pvals):
-                    # replayed/fallback slices keep their own paths —
-                    # their rows must not enter the shared write
+                    # other groups' and landed slices' rows stay out
                     inc = inc.filter(
                         F.col(self.partition_col).isin([p["pv"] for p in plans])
+                    )
+                touched_of = buckets_of
+                if nb != self.n_buckets:
+                    # the parent probe hashed in the PARENT's bucket
+                    # space: a rebucketed group probes its own rows
+                    touched_of = {}
+                    for r in inc.select(
+                        self.partition_col, "_bucket"
+                    ).distinct().collect():
+                        touched_of.setdefault(r[0], []).append(r[1])
+                for p in plans:
+                    tb = sorted(
+                        {str(int(b)) for b in touched_of[p["pv"]]}, key=int
+                    )
+                    p["touched"] = p["sub"]._widen_touched_for_retype(
+                        inc, p["scur"], tb
                     )
                 cur_dirs = [
                     os.path.join(p["sub"].path, p["scur"]["buckets"][b])
@@ -374,18 +329,16 @@ class PartitionedVersionedTable:
                     for b in p["touched"]
                     if b in p["scur"]["buckets"]
                 ]
+                union = inc
                 if cur_dirs:
-                    stored_schema = StructType.fromJson(
-                        json.loads(shared_schema_json[0])
-                    )
-                    current = self.spark.read.schema(stored_schema).parquet(
-                        *cur_dirs
-                    ).withColumn("_bucket", proto._bucket_expr(proto_nb))
+                    # declared-schema read; a legacy group (sj None)
+                    # falls back to mergeSchema
+                    current = proto._read_dirs(
+                        {"schema": json.loads(sj) if sj else None}, cur_dirs
+                    ).withColumn("_bucket", proto._bucket_expr(nb))
                     union = _align_to_incoming(current, inc).unionByName(
                         inc, allowMissingColumns=True
                     )
-                else:
-                    union = inc
                 # _part derived from the partition VALUE with the exact
                 # _pstr rendering (a bare cast-to-string can disagree
                 # with str() for some types)
@@ -430,29 +383,19 @@ class PartitionedVersionedTable:
                 for p in plans:
                     pdir = os.path.join(stage, f"_part={p['pstr']}")
                     sv = p["sub"]._mint_version(
-                        p["sub_meta"], p["scur"], p["nb"], p["touched"],
+                        p["sub_meta"], p["scur"], nb, p["touched"],
                         lambda b, d=pdir: os.path.join(d, f"_bucket={b}"),
                         schema_json,
                         batch_id,
                     )
-                    done.append((p["pstr"], {"gen": p["gen"], "v": sv}))
+                    # the sub-store's auto-rebucket policy: free below its
+                    # threshold, None when unset; a fired rebucket mints a
+                    # further sub-version, which the parent records
+                    rv = p["sub"].maybe_rebucket()
+                    new_man[p["pstr"]] = {
+                        "gen": p["gen"], "v": sv if rv is None else rv
+                    }
                 shutil.rmtree(stage, ignore_errors=True)
-            if fallback:
-                # sub-stores are independent (disjoint dirs + manifests),
-                # so fallback merges run CONCURRENTLY from driver threads.
-                # A failure in any slice aborts the batch before the
-                # parent publish (landed slices replay as sub-guard
-                # no-ops).
-                from concurrent.futures import ThreadPoolExecutor
-
-                if len(fallback) == 1:
-                    done.append(_merge_one(fallback[0]))
-                else:
-                    with ThreadPoolExecutor(
-                        max_workers=min(8, len(fallback))
-                    ) as ex:
-                        done.extend(ex.map(_merge_one, fallback))
-            new_man.update(dict(done))
         finally:
             changes.unpersist()
         new_v = meta["current"] + 1
@@ -558,7 +501,7 @@ class PartitionedVersionedTable:
         partitions — a manifest edit, zero data movement (at 100 TB the
         alternative, purge-by-key, touches every bucket of the dropped
         range).  Older parent versions still time-travel to the dropped
-        data until ``expire`` reclaims it; downstream MVs see the drop
+        data until ``gc`` reclaims it; downstream MVs see the drop
         as deletes in ``changes_between`` and retract accordingly."""
         meta = self._meta()
         cur_man = dict(meta["versions"].get(str(meta["current"]), {}))
@@ -583,7 +526,7 @@ class PartitionedVersionedTable:
         as a FRESH generation (the dropped-partition discipline: the old
         store must not leak rows into the restated view), referenced by
         a new parent version in one manifest flip; the old generation
-        remains readable via older parent versions until ``expire``.
+        remains readable via older parent versions until ``gc``.
         ``rows`` are inserts; ``seq_col`` names an existing total-order
         column, else a constant seq is stamped (the restatement IS the
         truth)."""
@@ -650,24 +593,34 @@ class PartitionedVersionedTable:
             ordered = sorted(parts)
         return self.drop_partitions(ordered[:-keep])
 
-    def expire(self, *, keep_last: int = 1) -> None:
-        """Expire parent snapshots, then physically reclaim: whole
+    def gc(
+        self, *, keep_last: int = 0, keep_versions: set[int] | None = None
+    ) -> list[int]:
+        """Expire parent snapshots (``VersionedBucketedTable.gc``'s
+        contract: retained = the current version, the newest
+        ``keep_last`` and everything in ``keep_versions``; returns the
+        expired version numbers), then physically reclaim: whole
         generation dirs no retained parent version references (the
         dropped partitions), and unreferenced sub-versions inside the
         generations that survive."""
         meta = self._meta()
         vs = sorted(int(v) for v in meta["versions"])
-        keep = {meta["current"], *vs[-max(1, keep_last):]}
-        for v in [v for v in vs if v not in keep]:
+        keep = set(keep_versions or ())
+        keep.add(meta["current"])
+        if keep_last > 0:
+            keep.update(vs[-keep_last:])
+        expired = [v for v in vs if v not in keep]
+        for v in expired:
             del meta["versions"][str(v)]
-        self._publish(meta)
+        if expired:
+            self._publish(meta)
         # referenced (partition, generation) → {sub-versions}
         refs: dict[tuple[str, str], set[int]] = {}
         for man in meta["versions"].values():
             for pstr, ent in man.items():
                 refs.setdefault((pstr, ent["gen"]), set()).add(int(ent["v"]))
         if not os.path.isdir(self.path):
-            return
+            return expired
         for pdir in os.listdir(self.path):
             if not pdir.startswith("p="):
                 continue
@@ -681,6 +634,7 @@ class PartitionedVersionedTable:
                     self._sub(pstr, gen).gc(keep_versions=live)
             if not os.listdir(pd):
                 os.rmdir(pd)
+        return expired
 
     # -- reads ---------------------------------------------------------------------
 

@@ -210,13 +210,18 @@ def test_coordinator_expire_and_gc_with_out_of_band_versions(spark, tmp_path):
     assert v_coord0 not in tbl.versions()
 
 
-def test_auto_retention_inside_the_stream(spark, tmp_path):
+@pytest.mark.parametrize(
+    "partition_col", [None, "yr"], ids=["versioned", "partitioned"]
+)
+def test_auto_retention_inside_the_stream(spark, tmp_path, partition_col):
     """post_batch_hook(retain_batches=2): a 6-micro-batch stream bounds
     its own history as it runs — after completion only the newest 2
     coordinates survive, every surviving coordinate is readable (the
     expire_and_gc invariant), and the table's version set + on-disk
     data dirs shrank accordingly (history bytes physically reclaimed,
-    not just meta rows dropped)."""
+    not just meta rows dropped).  Holds for a partitioned route too:
+    its parent ``gc`` keeps the referenced parent versions and each
+    live sub-store keeps only the sub-versions those reference."""
     import os
 
     from qin_cdc_spark.cdc.envelope import envelope_from_typed
@@ -226,22 +231,24 @@ def test_auto_retention_inside_the_stream(spark, tmp_path):
     env_dir = str(tmp_path / "env")
     for b in range(6):
         typed = spark.createDataFrame(
-            [("insert" if b == 0 else "update", b * 100 + i, i, f"v{b}.{i}")
+            [("insert" if b == 0 else "update", b * 100 + i, i, f"v{b}.{i}",
+              1990 + i % 2)
              for i in range(1, 5)],
-            "op string, seq long, id long, val string",
+            "op string, seq long, id long, val string, yr int",
         )
         envelope_from_typed(
-            typed.select("id", "val", "op", "seq"), db="src", table="t"
+            typed.select("id", "val", "yr", "op", "seq"), db="src", table="t"
         ).coalesce(1).write.mode("append").parquet(env_dir)
 
     route = CdcStreamRoute(
         spark,
         db="src",
         table="t",
-        schema=_parse_datatype_string("id long, val string"),
+        schema=_parse_datatype_string("id long, val string, yr int"),
         keys=["id"],
         target_path=str(tmp_path / "tbl"),
         versioned=True,
+        partition_col=partition_col,
     )
     coord = SnapshotCoordinator.for_routes(str(tmp_path / "coord"), [route])
     q = start_cdc_stream(
@@ -267,13 +274,19 @@ def test_auto_retention_inside_the_stream(spark, tmp_path):
     # and unreferenced data dirs are gone from disk (the publish GC):
     # with 6 versions of 1-bucket-wide updates, an unbounded table would
     # hold 6 dirs; retention leaves exactly the referenced ones
-    live_dirs = {d for d in os.listdir(tbl.path) if d.startswith("d-")}
-    manifest_dirs = set()
-    for v in tbl.versions():
-        manifest_dirs |= set(
-            tbl._meta()["versions"][str(v)]["buckets"].values()
-        )
-    assert live_dirs == manifest_dirs
+    stores = [tbl]
+    if partition_col is not None:
+        stores = [tbl._sub(p, e["gen"]) for p, e in tbl._manifest().items()]
+        assert len(stores) == 2
+    for store in stores:
+        live_dirs = {d for d in os.listdir(store.path) if d.startswith("d-")}
+        manifest_dirs = set()
+        for v in store.versions():
+            manifest_dirs |= set(
+                store._meta()["versions"][str(v)]["buckets"].values()
+            )
+        assert live_dirs == manifest_dirs
+        assert len(store.versions()) <= 2
 
 
 def test_egress_stamp_and_consistent_wire_replay(spark, tmp_path):

@@ -24,6 +24,7 @@ pre-optimization code):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from qin_cdc_spark.cdc.apply import _any_of, decode_envelope, parse_row
@@ -257,30 +258,79 @@ def test_pk_move_expansion_rowset_and_single_parse(spark):
 # -- round-11 optimization internals ------------------------------------------
 
 
-def test_partitioned_merge_single_write_matches_lww(spark, tmp_path):
-    """The one-write-per-batch partitioned merge (OPTIMIZATION_r11) must
-    produce exactly the per-slice result: per-partition LWW over the
-    full stream, one sub-version per touched partition per batch, and
-    bucket placement under the parent's bucket expression."""
+_PART_SCH = "op string, seq long, k long, yr int, val string"
+_PART_ROWS0 = [("insert", i, i, 1990 + (i % 3), f"v{i}") for i in range(1, 25)]
+_PART_ROWS1 = (
+    [("update", 100 + i, i, 1990 + (i % 3), f"w{i}") for i in range(1, 9)]
+    + [("delete", 200, 9, 1990, "v9")]
+    # a partition born in batch 1
+    + [("insert", 201, 99, 1999, "new")]
+)
+
+
+def _part_sub(tbl, pstr):
+    return tbl._sub(pstr, tbl._manifest()[pstr]["gen"])
+
+
+def _rebucket_1990(tbl):
+    _part_sub(tbl, "1990").rebucket(8)
+
+
+def _strip_schema_1991(tbl):
+    """Make 1991's current manifest look legacy (written before
+    manifests recorded their schema)."""
+    sub = _part_sub(tbl, "1991")
+    meta = sub._meta()
+    del meta["versions"][str(meta["current"])]["schema"]
+    sub._publish(meta)
+
+
+@pytest.mark.parametrize(
+    "rows1, prepare, table_opts",
+    [
+        pytest.param(_PART_ROWS1, None, {}, id="multi_partition"),
+        pytest.param(
+            [r for r in _PART_ROWS1 if r[3] == 1990], None, {},
+            id="one_partition",
+        ),
+        pytest.param(_PART_ROWS1, _rebucket_1990, {}, id="rebucketed_sub"),
+        pytest.param(_PART_ROWS1, _strip_schema_1991, {}, id="legacy_sub"),
+        pytest.param(
+            [r for r in _PART_ROWS1 if r[3] in (1990, 1991)], None,
+            # any real parquet file crosses 64 bytes/bucket; a 1-byte
+            # threshold would double every sub-store to the 4096 cap
+            {"auto_rebucket_bytes": 64}, id="auto_rebucket",
+        ),
+    ],
+)
+def test_partitioned_merge_single_write_matches_lww(
+    spark, tmp_path, rows1, prepare, table_opts
+):
+    """The grouped one-write partitioned merge must produce exactly the
+    per-slice result: per-partition LWW over the full stream, one
+    sub-version per touched partition per batch, and bucket placement
+    under each sub-store's own bucket count — for a single-partition
+    batch, a rebucketed sub-store, a legacy (schema-less) manifest, and
+    under the sub-stores' auto-rebucket policy, which must fire on a
+    multi-partition batch too."""
     from qin_cdc_spark.streaming.partitioned import PartitionedVersionedTable
 
-    rows0 = [("insert", i, i, 1990 + (i % 3), f"v{i}") for i in range(1, 25)]
-    rows1 = (
-        [("update", 100 + i, i, 1990 + (i % 3), f"w{i}") for i in range(1, 9)]
-        + [("delete", 200, 9, 1990, "v9")]
-        # a partition born in batch 1
-        + [("insert", 201, 99, 1999, "new")]
-    )
-    sch = "op string, seq long, k long, yr int, val string"
     tbl = PartitionedVersionedTable(
-        spark, str(tmp_path / "t"), ["k"], partition_col="yr", n_buckets=4
+        spark, str(tmp_path / "t"), ["k"], partition_col="yr", n_buckets=4,
+        table_opts=table_opts,
     )
-    tbl.merge(spark.createDataFrame(rows0, sch), batch_id=0)
-    tbl.merge(spark.createDataFrame(rows1, sch), batch_id=1)
+    tbl.merge(spark.createDataFrame(_PART_ROWS0, _PART_SCH), batch_id=0)
+    if prepare is not None:
+        prepare(tbl)
+    before = {
+        pstr: len(tbl._sub(pstr, ent["gen"]).versions())
+        for pstr, ent in tbl._manifest().items()
+    }
+    tbl.merge(spark.createDataFrame(rows1, _PART_SCH), batch_id=1)
 
     from qin_cdc_spark.cdc.apply import latest_by_key
 
-    ev = spark.createDataFrame(rows0 + rows1, sch)
+    ev = spark.createDataFrame(_PART_ROWS0 + rows1, _PART_SCH)
     want = {
         (r.k, r.yr, r.val)
         for r in latest_by_key(ev, ["k"], seq_col="seq")
@@ -289,18 +339,65 @@ def test_partitioned_merge_single_write_matches_lww(spark, tmp_path):
     }
     got = {(r.k, r.yr, r.val) for r in tbl.read().collect()}
     assert got == want
-    # every touched partition minted exactly one sub-version per batch
+    # point reads hash with the sub-store's CURRENT bucket count
+    for k in (3, 6):
+        assert [r.val for r in tbl.read_key(1990, [k]).collect()] == [
+            v for kk, _, v in want if kk == k
+        ]
+    touched = {str(r[3]) for r in rows1}
     man = tbl._manifest()
     for pstr, ent in man.items():
         sub = tbl._sub(pstr, ent["gen"])
-        expect = 1 if pstr == "1999" else 2
-        assert len(sub.versions()) == expect, (pstr, sub.versions())
-        # batch guard advanced atomically with the sub publish
-        assert sub.last_batch_id() == 1
+        sub_man = sub._meta()["versions"][str(sub.current_version())]
+        # the version a merge mints records its schema (legacy included)
+        assert sub_man.get("schema") is not None, pstr
+        if table_opts.get("auto_rebucket_bytes"):
+            # the policy fired for every partition the batches touched
+            assert sub._manifest_n_buckets(sub_man) > 4, pstr
+            continue
+        # every touched partition minted exactly one sub-version
+        added = len(sub.versions()) - before.get(pstr, 0)
+        assert added == (1 if pstr in touched else 0), (pstr, sub.versions())
+        if pstr in touched:
+            # batch guard advanced atomically with the sub publish
+            assert sub.last_batch_id() == 1
     # replay of the whole batch is a parent-guard no-op
     v = tbl.current_version()
-    tbl.merge(spark.createDataFrame(rows1, sch), batch_id=1)
+    tbl.merge(spark.createDataFrame(rows1, _PART_SCH), batch_id=1)
     assert tbl.current_version() == v
+
+
+def _job_ids(spark) -> set[int]:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_partitioned_merge_jobs_independent_of_partition_count(spark, tmp_path):
+    """One grouped write per batch: a one-partition batch and a
+    three-partition batch of the same schema run the same number of
+    Spark jobs.  The two counts are compared with each other, not with
+    a fixed number — AQE adds map-stage jobs."""
+    from qin_cdc_spark.streaming.partitioned import PartitionedVersionedTable
+
+    tbl = PartitionedVersionedTable(
+        spark, str(tmp_path / "t"), ["k"], partition_col="yr", n_buckets=4
+    )
+    tbl.merge(spark.createDataFrame(_PART_ROWS0, _PART_SCH), batch_id=0)
+
+    def jobs_of(rows, batch_id):
+        batch = spark.createDataFrame(rows, _PART_SCH)
+        seen = _job_ids(spark)
+        tbl.merge(batch, batch_id=batch_id)
+        return len(_job_ids(spark) - seen)
+
+    one = jobs_of(
+        [("update", 100 + i, i, 1990, f"w{i}") for i in (3, 6, 12)], 1
+    )
+    three = jobs_of(
+        [("update", 200 + i, i, 1990 + (i % 3), f"x{i}") for i in (3, 4, 5)], 2
+    )
+    assert one > 0
+    assert one == three, (one, three)
 
 
 def test_partitioned_merge_divergent_schemas_fall_back(spark, tmp_path):

@@ -79,7 +79,7 @@ def test_expire_reclaims_dropped_partition(spark, tmp_path):
     tbl.merge(_ev(spark, BATCH1), batch_id=0)
     tbl.merge(_ev(spark, BATCH2), batch_id=1)
     tbl.drop_partitions([1992])
-    tbl.expire(keep_last=1)
+    tbl.gc(keep_last=1)
     assert not os.path.isdir(str(tmp_path / "t" / "p=1992"))
     # retained partitions unaffected
     assert _live(tbl) == {4: (1996, 40), 5: (1997, 50)}
