@@ -1159,7 +1159,11 @@ class VersionedBucketedTable:
         if full is None:
             raise ValueError(f"rebucket: no current snapshot at {self.path}")
         rows = full.withColumn("_bucket", self._bucket_expr(new_n_buckets))
-        rows = rows.repartition(new_n_buckets, F.col("_bucket"))
+        # hash on _bucket alone keeps every bucket in one task (one file
+        # per bucket dir); no fixed task count, so AQE sizes the write
+        # by bytes instead of running one task per bucket (4096 mostly
+        # empty tasks for a small table at the policy's cap)
+        rows = rows.repartition(F.col("_bucket"))
         rows = self._cluster(rows)
         stage = os.path.join(self.path, f".stage-{uuid.uuid4().hex[:8]}")
         rows.write.partitionBy("_bucket").parquet(stage)
