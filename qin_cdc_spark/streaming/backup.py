@@ -35,23 +35,15 @@ you want every retained version.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import uuid
 
+from qin_cdc_spark.streaming import pointer
 from qin_cdc_spark.streaming.partitioned import (
     PART_META_NAME,
     PartitionedVersionedTable,
 )
 from qin_cdc_spark.streaming.versioned import META_NAME, VersionedBucketedTable
-
-
-def _atomic_write(path: str, meta: dict) -> None:
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, path)
 
 
 def clone_versioned(
@@ -79,8 +71,9 @@ def clone_versioned(
         dst = os.path.join(dest_path, d)
         if not os.path.isdir(dst):
             shutil.copytree(src, dst)
-    _atomic_write(
-        os.path.join(dest_path, META_NAME),
+    pointer.publish(
+        dest_path,
+        META_NAME,
         {
             "current": v,
             "last_batch_id": meta["last_batch_id"] if preserve_batch_id else -1,
@@ -130,8 +123,9 @@ def clone_partitioned(
             version=int(ent["v"]),
             preserve_batch_id=True,  # sub guards carry their own ids
         )
-    _atomic_write(
-        os.path.join(dest_path, PART_META_NAME),
+    pointer.publish(
+        dest_path,
+        PART_META_NAME,
         {
             "current": v,
             "last_batch_id": meta["last_batch_id"] if preserve_batch_id else -1,

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from qin_cdc_spark.cdc.apply import decode_envelope, latest_by_key
+from qin_cdc_spark.streaming import pointer
 
 # Routes default to the bucketed target: per-batch merge cost must scale
 # with |batch keys|, not |table| — the flat full-rewrite table is the
@@ -821,28 +822,17 @@ class BucketedUpsertTable(ParquetUpsertTable):
     # -- schema manifest -----------------------------------------------------
 
     def _read_schema_manifest(self):
-        import json
-
-        p = os.path.join(self.path, self.SCHEMA_NAME)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return StructType.fromJson(json.load(f))
+        man = pointer.load(self.path, self.SCHEMA_NAME, None)
+        return None if man is None else StructType.fromJson(man)
 
     def _write_schema_manifest(self, schema: StructType, dir_path: str | None = None) -> None:
-        """Atomic manifest publish (tmp + os.replace).  ``dir_path``
-        lets full-rewrite paths stage it INSIDE the pre-swap directory
-        so data and schema flip together."""
-        import json
-
+        """Atomic manifest publish.  ``dir_path`` lets full-rewrite
+        paths stage it INSIDE the pre-swap directory so data and schema
+        flip together."""
         schema = StructType(
             [f for f in schema.fields if f.name != self.BUCKET_COL]
         )
-        d = dir_path or self.path
-        tmp = os.path.join(d, f".{self.SCHEMA_NAME}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(schema.jsonValue(), f)
-        os.replace(tmp, os.path.join(d, self.SCHEMA_NAME))
+        pointer.publish(dir_path or self.path, self.SCHEMA_NAME, schema.jsonValue())
 
     def _stored_schema(self):
         """The table's logical schema: the manifest when present, else

@@ -23,9 +23,7 @@ No reference analog (qin-cdc has no sketch surface); north-star §2.C.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import uuid
 
 import pyspark.sql.functions as F
@@ -34,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from qin_cdc_spark.functions.text import hash60, words
 from qin_cdc_spark.operators.retrieval import CMS_D, CMS_TOPK, CMS_W
 from qin_cdc_spark.sources.tables import load_table
+from qin_cdc_spark.streaming import pointer
 
 META_NAME = "_cms_meta.json"
 
@@ -72,22 +71,11 @@ class CmsStore:
         self.path = path
 
     def _meta(self) -> dict:
-        meta = os.path.join(self.path, META_NAME)
-        if os.path.exists(meta):
-            with open(meta) as f:
-                return json.load(f)
-        return {"last_batch_id": -1, "data": None}
+        return pointer.load(self.path, META_NAME, {"last_batch_id": -1, "data": None})
 
     def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f".{META_NAME}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, META_NAME))
-        live = meta["data"]
-        for d in os.listdir(self.path):
-            if d.startswith("v-") and d != live:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        pointer.publish(self.path, META_NAME, meta)
+        pointer.sweep(self.path, "v-", {meta["data"]})
 
     def exists(self) -> bool:
         return self._meta()["data"] is not None

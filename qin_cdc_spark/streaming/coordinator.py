@@ -39,9 +39,10 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
+
+from qin_cdc_spark.streaming import pointer
 
 COORD_META = "_coordinates.json"
 # Append-only record log: one JSON line per coordinate.  The base JSON
@@ -111,12 +112,8 @@ def load_coordinates(path: str) -> dict:
     sealed segments plus the active append-only log folded on top
     (shared by the read side and fsck, so the two can never disagree
     on the layout)."""
-    meta = {"batches": {}}
-    p = os.path.join(path, COORD_META)
-    if os.path.exists(p):
-        with open(p) as f:
-            meta = json.load(f)
-        meta.setdefault("batches", {})
+    meta = pointer.load(path, COORD_META, {})
+    meta.setdefault("batches", {})
     floor = meta.get("floor", -1)
     # base entries predate the floor stamp only in a crash window —
     # filter them the same way stale segments are filtered
@@ -452,23 +449,15 @@ class SnapshotCoordinator:
         self._cache = meta
         # bounded base rewrite: floor + hwms + surviving base-resident
         # (legacy pre-segment) entries only — never the retained set
-        base = {"batches": {}}
-        bp = os.path.join(self.path, COORD_META)
-        if os.path.exists(bp):
-            with open(bp) as f:
-                base = json.load(f)
-            base.setdefault("batches", {})
+        base = pointer.load(self.path, COORD_META, {})
+        base.setdefault("batches", {})
         for b in [b for b in base["batches"] if int(b) <= floor]:
             del base["batches"][b]
             base.get("egress", {}).pop(b, None)
         base["floor"] = floor
         if hwms:
             base["egress_hwm"] = hwms
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f".{COORD_META}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(base, f)
-        os.replace(tmp, os.path.join(self.path, COORD_META))
+        pointer.publish(self.path, COORD_META, base)
         # seal the active log, then reclaim fully-expired segments by
         # name math — one unlink each
         self._rotate_log()

@@ -21,15 +21,20 @@ rescan on retraction and are deliberately not offered.  Use integer
 (cents-quantized) value columns: float sums under retraction reorder
 arbitrarily, the repo-wide cross-engine lesson (PLANS.md).
 
-Publish is the snapshot-pointer pattern shared with RollupStore: an
-immutable data dir per refresh + one atomic ``os.replace`` of the meta
-JSON recording the last applied source version — a crashed refresh
-leaves the previous state intact and replays from the same CDF range.
+Publish discipline, shared by every view here: state lives in
+immutable, uniquely named data dirs, and one pointer file names the
+live dirs together with the source version(s) folded into them.  A
+refresh writes its new dirs, then flips the pointer through
+``streaming/pointer.py`` (flip first, then sweep the dirs it no longer
+names).  A crashed refresh leaves the previous state and version
+intact and replays from the same CDF range.  ``DerivedJoinTable``'s
+pointer holds only versions (its rows live in a flat bucketed table);
+``DerivedKeyedAggTable`` needs no pointer of its own, because its
+state and progress commit in one manifest flip.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -37,35 +42,69 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from qin_cdc_spark.streaming import pointer
 from qin_cdc_spark.streaming.versioned import VersionedBucketedTable
 
 META_NAME = "_derived_meta.json"
 
 
-def _rename_pointer_state(mv, state_map: dict[str, str], prefix: str) -> None:
-    """Rewrite a snapshot-pointer MV's published state dir under renamed
-    column names (shared by the Agg/Extrema/Quantile/TopK maintainers).
-    The state is view-sized (per-group aggregates), so the rewrite is
-    O(|view|), not O(source).  Idempotent under replay: already-renamed
-    state plans zero steps and publishes nothing (rename_plan.py)."""
-    from qin_cdc_spark.streaming.rename_plan import plan_renames, rename_frame
+class _PointerView:
+    """A view that rewrites its whole (view-sized) state each refresh:
+    one data dir named by a ``{"applied_version", "data"}`` pointer.
+    Subclasses set only the pointer-file name and the data-dir prefix."""
 
-    meta = mv._meta()
-    if meta.get("data") is None or not state_map:
-        return
-    df = mv.spark.read.parquet(os.path.join(mv.path, meta["data"]))
-    applied = plan_renames(df.columns, state_map, missing_ok=True)
-    if not applied:
-        return
-    df = rename_frame(df, applied)
-    dname = f"{prefix}-{uuid.uuid4().hex[:12]}"
-    df.write.parquet(os.path.join(mv.path, dname))
-    meta["data"] = dname
-    mv._publish(meta)
+    POINTER: str
+    PREFIX: str
+
+    def _meta(self) -> dict:
+        return pointer.load(
+            self.path, self.POINTER, {"applied_version": 0, "data": None}
+        )
+
+    def _publish(self, meta: dict) -> None:
+        pointer.publish(self.path, self.POINTER, meta)
+        pointer.sweep(self.path, f"{self.PREFIX}-", {meta["data"]})
+
+    def applied_version(self) -> int:
+        return self._meta()["applied_version"]
+
+    def _state(self) -> DataFrame | None:
+        data = self._meta()["data"]
+        if data is None:
+            return None
+        return self.spark.read.parquet(os.path.join(self.path, data))
+
+    def read(self) -> DataFrame | None:
+        return self._state()
+
+    def _commit(self, state: DataFrame, version: int) -> int:
+        """Write ``state`` to a fresh data dir and publish it as the
+        view as of source ``version``."""
+        dname = f"{self.PREFIX}-{uuid.uuid4().hex[:12]}"
+        state.write.parquet(os.path.join(self.path, dname))
+        self._publish({"applied_version": version, "data": dname})
+        return version
+
+    def _rename_pointer_state(self, state_map: dict[str, str]) -> None:
+        """Rewrite the published state under renamed column names.
+        The state is view-sized (per-group aggregates), so the rewrite
+        is O(|view|), not O(source).  Idempotent under replay:
+        already-renamed state plans zero steps and publishes nothing
+        (rename_plan.py)."""
+        from qin_cdc_spark.streaming.rename_plan import plan_renames, rename_frame
+
+        df = self._state() if state_map else None
+        if df is None:
+            return
+        applied = plan_renames(df.columns, state_map, missing_ok=True)
+        if applied:
+            self._commit(rename_frame(df, applied), self.applied_version())
 
 
-class DerivedAggTable:
+class DerivedAggTable(_PointerView):
     """(group_cols → cnt, sum_<col>…) maintained from a CDF."""
+
+    POINTER, PREFIX = META_NAME, "agg"
 
     def __init__(
         self,
@@ -79,34 +118,6 @@ class DerivedAggTable:
         self.path = path
         self.group_cols = list(group_cols)
         self.sum_cols = list(sum_cols)
-
-    # -- meta --------------------------------------------------------------
-
-    def _meta(self) -> dict:
-        p = os.path.join(self.path, META_NAME)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"applied_version": 0, "data": None}
-
-    def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f".{META_NAME}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, META_NAME))
-        for d in os.listdir(self.path):
-            if d.startswith("agg-") and d != meta["data"]:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def applied_version(self) -> int:
-        return self._meta()["applied_version"]
-
-    def read(self) -> DataFrame | None:
-        meta = self._meta()
-        if meta["data"] is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, meta["data"]))
 
     def rename_columns(self, mapping: dict[str, str]) -> None:
         """Follow an upstream column rename on the SOURCE table: the
@@ -128,7 +139,7 @@ class DerivedAggTable:
         )
         self.group_cols = [mapping.get(c, c) for c in self.group_cols]
         self.sum_cols = [mapping.get(c, c) for c in self.sum_cols]
-        _rename_pointer_state(self, state_map, "agg")
+        self._rename_pointer_state(state_map)
 
     # -- refresh -----------------------------------------------------------
 
@@ -200,10 +211,7 @@ class DerivedAggTable:
             F.col("dcnt").alias("cnt"),
             *[F.col(f"dsum_{c}").alias(f"sum_{c}") for c in self.sum_cols],
         )
-        dname = f"agg-{uuid.uuid4().hex[:12]}"
-        out.write.parquet(os.path.join(self.path, dname))
-        self._publish({"applied_version": v_to, "data": dname})
-        return v_to
+        return self._commit(out, v_to)
 
 
 JOIN_META_NAME = "_derived_join_meta.json"
@@ -274,18 +282,14 @@ class DerivedJoinTable:
     # -- meta --------------------------------------------------------------
 
     def _meta(self) -> dict:
-        p = os.path.join(self.path, JOIN_META_NAME)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"applied_fact": 0, "applied_dim": 0, "refresh_n": 0}
+        return pointer.load(
+            self.path,
+            JOIN_META_NAME,
+            {"applied_fact": 0, "applied_dim": 0, "refresh_n": 0},
+        )
 
     def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f".{JOIN_META_NAME}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, JOIN_META_NAME))
+        pointer.publish(self.path, JOIN_META_NAME, meta)
 
     def applied_versions(self) -> tuple[int, int]:
         m = self._meta()
@@ -409,7 +413,7 @@ class DerivedJoinTable:
 EXTREMA_META_NAME = "_derived_extrema_meta.json"
 
 
-class DerivedExtremaTable:
+class DerivedExtremaTable(_PointerView):
     """Incrementally-maintained per-group (count, min, max) — the
     classic HARD case of materialized-view maintenance: min/max are
     not retractable (removing the current extremum says nothing about
@@ -438,10 +442,9 @@ class DerivedExtremaTable:
 
     NULL handling matches SQL aggregates: nulls never become extrema
     and their retraction never forces a rescan; ``cnt`` counts rows.
-    Publish is the shared snapshot-pointer pattern (atomic meta
-    os.replace recording the applied source version; crash ⇒ same CDF
-    range replays and converges).
     """
+
+    POINTER, PREFIX = EXTREMA_META_NAME, "ext"
 
     def __init__(
         self,
@@ -458,36 +461,6 @@ class DerivedExtremaTable:
         self.minmax_cols = list(minmax_cols)
         self.probe_limit = probe_limit
 
-    # -- meta / io (snapshot-pointer pattern) -------------------------------
-
-    def _meta(self) -> dict:
-        p = os.path.join(self.path, EXTREMA_META_NAME)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"applied_version": 0, "data": None}
-
-    def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(
-            self.path, f".{EXTREMA_META_NAME}.tmp-{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, EXTREMA_META_NAME))
-        for d in os.listdir(self.path):
-            if d.startswith("ext-") and d != meta["data"]:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def applied_version(self) -> int:
-        return self._meta()["applied_version"]
-
-    def read(self) -> DataFrame | None:
-        meta = self._meta()
-        if meta["data"] is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, meta["data"]))
-
     def rename_columns(self, mapping: dict[str, str]) -> None:
         """Follow an upstream source-column rename (see
         DerivedAggTable.rename_columns): state carries group names raw
@@ -499,7 +472,7 @@ class DerivedExtremaTable:
                 state_map[f"max_{o}"] = f"max_{n}"
         self.group_cols = [mapping.get(c, c) for c in self.group_cols]
         self.minmax_cols = [mapping.get(c, c) for c in self.minmax_cols]
-        _rename_pointer_state(self, state_map, "ext")
+        self._rename_pointer_state(state_map)
 
     # -- refresh -----------------------------------------------------------
 
@@ -640,23 +613,16 @@ class DerivedExtremaTable:
                         for c in self.minmax_cols
                     ],
                 )
-                out = merged.unionByName(rescanned)
-                dname = f"ext-{uuid.uuid4().hex[:12]}"
-                out.write.parquet(os.path.join(self.path, dname))
-                self._publish({"applied_version": v1, "data": dname})
-                return v1
+                return self._commit(merged.unionByName(rescanned), v1)
             finally:
                 j.unpersist()
-        dname = f"ext-{uuid.uuid4().hex[:12]}"
-        out.write.parquet(os.path.join(self.path, dname))
-        self._publish({"applied_version": v1, "data": dname})
-        return v1
+        return self._commit(out, v1)
 
 
 QUANTILE_META_NAME = "_derived_quantile_meta.json"
 
 
-class DerivedQuantileTable:
+class DerivedQuantileTable(_PointerView):
     """Incrementally-maintained per-group binned quantile histogram —
     the retractable answer to percentile maintenance.  Exact order
     statistics are not retractable (like min/max they need a rescan
@@ -676,16 +642,15 @@ class DerivedQuantileTable:
 
     Per-refresh cost: O(|delta| + touched (group, bin) rows); state is
     |groups|·|occupied bins| rows (bins are sparse — only occupied ones
-    exist).  Publish is the shared snapshot-pointer pattern: immutable
-    ``qb-*`` dirs + one atomic meta replace recording the applied
-    source version; a crashed refresh replays the same CDF range and
-    converges.
+    exist).  ``read`` returns that state: (group_cols…, bin, cnt).
 
     Completes the retractable-MV family: sum/count
     (``DerivedAggTable``), min/max (``DerivedExtremaTable``), distinct
     counts (``DerivedDistinctTable``), quantiles here — the reference
     (Go CDC plumbing) leaves all of these to the downstream warehouse.
     """
+
+    POINTER, PREFIX = QUANTILE_META_NAME, "qb"
 
     def __init__(
         self,
@@ -704,37 +669,6 @@ class DerivedQuantileTable:
         self.value_col = value_col
         self.bin_width = int(bin_width)
 
-    # -- meta / io (snapshot-pointer pattern) -------------------------------
-
-    def _meta(self) -> dict:
-        p = os.path.join(self.path, QUANTILE_META_NAME)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"applied_version": 0, "data": None}
-
-    def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(
-            self.path, f".{QUANTILE_META_NAME}.tmp-{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, QUANTILE_META_NAME))
-        for d in os.listdir(self.path):
-            if d.startswith("qb-") and d != meta["data"]:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def applied_version(self) -> int:
-        return self._meta()["applied_version"]
-
-    def read(self) -> DataFrame | None:
-        """The histogram state: (group_cols…, bin, cnt)."""
-        meta = self._meta()
-        if meta["data"] is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, meta["data"]))
-
     def rename_columns(self, mapping: dict[str, str]) -> None:
         """Follow an upstream source-column rename: state rows are
         (group…, bin, cnt) — only group names appear; the value column
@@ -742,7 +676,7 @@ class DerivedQuantileTable:
         state_map = {o: n for o, n in mapping.items() if o in self.group_cols}
         self.group_cols = [mapping.get(c, c) for c in self.group_cols]
         self.value_col = mapping.get(self.value_col, self.value_col)
-        _rename_pointer_state(self, state_map, "qb")
+        self._rename_pointer_state(state_map)
 
     def _bin(self, col) -> F.Column:
         # exact floor division for any sign and any int64 magnitude:
@@ -810,10 +744,7 @@ class DerivedQuantileTable:
                 .agg(F.sum("dcnt").cast("long").alias("cnt"))
                 .filter(F.col("cnt") > 0)
             )
-        dname = f"qb-{uuid.uuid4().hex[:12]}"
-        out.write.parquet(os.path.join(self.path, dname))
-        self._publish({"applied_version": v1, "data": dname})
-        return v1
+        return self._commit(out, v1)
 
     # -- quantile walk -------------------------------------------------------
 
@@ -870,9 +801,6 @@ class DerivedDistinctTable:
 
     Per-refresh cost: O(|delta| + touched state buckets + touched
     groups).  NULLs never count (SQL ``count(distinct)`` semantics).
-    Publish is the shared snapshot-pointer pattern: immutable dirs, one
-    atomic meta replace recording the applied source version; a crashed
-    refresh replays the same CDF range and converges.
 
     Reference parity: the reference streams rows and leaves every
     aggregate to the downstream warehouse; with sum/count
@@ -895,29 +823,19 @@ class DerivedDistinctTable:
         self.value_col = value_col
         self.n_buckets = n_buckets
 
-    # -- meta / io (snapshot-pointer pattern) -------------------------------
+    # -- meta --------------------------------------------------------------
 
     def _meta(self) -> dict:
-        p = os.path.join(self.path, DISTINCT_META_NAME)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"applied_version": 0, "buckets": {}, "rollup": None}
+        return pointer.load(
+            self.path,
+            DISTINCT_META_NAME,
+            {"applied_version": 0, "buckets": {}, "rollup": None},
+        )
 
     def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(
-            self.path, f".{DISTINCT_META_NAME}.tmp-{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, DISTINCT_META_NAME))
-        live = set(meta["buckets"].values())
-        if meta["rollup"]:
-            live.add(meta["rollup"])
-        for d in os.listdir(self.path):
-            if d.startswith(("st-", "ru-")) and d not in live:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        pointer.publish(self.path, DISTINCT_META_NAME, meta)
+        live = {*meta["buckets"].values(), meta["rollup"]}
+        pointer.sweep(self.path, ("st-", "ru-"), live)
 
     def applied_version(self) -> int:
         return self._meta()["applied_version"]
@@ -1154,7 +1072,7 @@ class DerivedDistinctTable:
 TOPK_META_NAME = "_derived_topk_meta.json"
 
 
-class DerivedTopKTable:
+class DerivedTopKTable(_PointerView):
     """Incrementally-maintained per-group TOP-K rows (value desc, key
     asc) — the serving-layer MV behind leaderboards, per-query retrieval
     caches, and per-source "best documents" lists.  Top-k shares
@@ -1184,10 +1102,12 @@ class DerivedTopKTable:
     Per-refresh cost: O(|delta| + |groups|·buffer + Σ size of
     underflowed groups).  Per-group live counts ride the same state
     (cnt is retractable), so "buffer == whole group" needs no extra
-    flag.  NULL values never rank.  Publish is the shared
-    snapshot-pointer pattern; a crashed refresh replays the same CDF
-    range and converges.
+    flag.  NULL values never rank.  The state is the buffer rows
+    (group…, key…, value, cnt), ``cnt`` being the group's live-row
+    count replicated across its buffer rows.
     """
+
+    POINTER, PREFIX = TOPK_META_NAME, "tk"
 
     def __init__(
         self,
@@ -1213,38 +1133,6 @@ class DerivedTopKTable:
         if self.buffer_size < self.k:
             raise ValueError("buffer_size must be >= k")
         self.probe_limit = probe_limit
-
-    # -- meta / io (snapshot-pointer pattern) -------------------------------
-
-    def _meta(self) -> dict:
-        p = os.path.join(self.path, TOPK_META_NAME)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"applied_version": 0, "data": None}
-
-    def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(
-            self.path, f".{TOPK_META_NAME}.tmp-{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, TOPK_META_NAME))
-        for d in os.listdir(self.path):
-            if d.startswith("tk-") and d != meta["data"]:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def applied_version(self) -> int:
-        return self._meta()["applied_version"]
-
-    def _state(self) -> DataFrame | None:
-        """Buffer rows: (group…, key…, value, cnt) — ``cnt`` is the
-        group's live-row count, replicated across its buffer rows."""
-        meta = self._meta()
-        if meta["data"] is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, meta["data"]))
 
     def read(self) -> DataFrame | None:
         """The published view: exactly the top-min(k, cnt) rows per
@@ -1272,7 +1160,7 @@ class DerivedTopKTable:
         self.group_cols = [mapping.get(c, c) for c in self.group_cols]
         self.key_cols = [mapping.get(c, c) for c in self.key_cols]
         self.value_col = mapping.get(self.value_col, self.value_col)
-        _rename_pointer_state(self, state_map, "tk")
+        self._rename_pointer_state(state_map)
 
     # -- ordering helpers ----------------------------------------------------
 
@@ -1304,20 +1192,8 @@ class DerivedTopKTable:
             .drop("_rn")
         )
 
-    def _rescan_rows(
-        self, source: VersionedBucketedTable, groups: DataFrame, version: int
-    ):
-        if len(self.group_cols) == 1 and self.group_cols[0] in source.bloom_cols:
-            g = self.group_cols[0]
-            vals = [r[0] for r in groups.limit(self.probe_limit + 1).collect()]
-            if len(vals) <= self.probe_limit:
-                try:
-                    return source.read_where(g, vals, version=version)
-                except TypeError:
-                    pass  # non-int/str group key: semi-join fallback
-        return source.read_at(version).join(
-            F.broadcast(groups), self.group_cols, "left_semi"
-        )
+    # the extrema view's bounded probe, shared as-is
+    _rescan_rows = DerivedExtremaTable._rescan_rows
 
     # -- refresh -----------------------------------------------------------
 
@@ -1329,11 +1205,7 @@ class DerivedTopKTable:
         if v1 <= v0:
             return v0
         if v0 == 0 or meta["data"] is None:
-            out = self._full_topb(source.read_at(v1))
-            dname = f"tk-{uuid.uuid4().hex[:12]}"
-            out.write.parquet(os.path.join(self.path, dname))
-            self._publish({"applied_version": v1, "data": dname})
-            return v1
+            return self._commit(self._full_topb(source.read_at(v1)), v1)
 
         cdf = source.changes_between(v0, v1, include_preimage=True)
         gk = [*self.group_cols, *self.key_cols]
@@ -1489,11 +1361,7 @@ class DerivedTopKTable:
                     "inner",
                 )
             )
-            out = ok.unionByName(rescanned)
-            dname = f"tk-{uuid.uuid4().hex[:12]}"
-            out.write.parquet(os.path.join(self.path, dname))
-            self._publish({"applied_version": v1, "data": dname})
-            return v1
+            return self._commit(ok.unionByName(rescanned), v1)
         finally:
             need.unpersist()
 

@@ -43,7 +43,6 @@ micro-batch + checkpoint semantics.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -59,11 +58,13 @@ from qin_cdc_spark.functions.text import (
     word_shingles,
 )
 from qin_cdc_spark.sources.tables import load_table
+from qin_cdc_spark.streaming import pointer
 
 N_MINHASH = 64
 N_BANDS = 16
 ROWS_PER_BAND = 4
 DEFAULT_THRESHOLD = 0.5  # estimated Jaccard (signature agreement fraction)
+BANDS_META_NAME = "_bands_meta.json"
 
 
 def _signatures(docs: DataFrame) -> DataFrame:
@@ -164,10 +165,6 @@ class NearDupStore:
     def _bands_path(self) -> str:
         return os.path.join(self.path, "_bands")
 
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_bands_meta.json")
-
     def exists(self) -> bool:
         # walk (not listdir): data files may sit in subdirectories; skip
         # hidden/underscore trees so the band index never counts as data
@@ -191,10 +188,8 @@ class NearDupStore:
     def _watermark(self) -> int | None:
         """Highest first_seen_batch covered by the band index, or None
         if never compacted."""
-        if not os.path.isfile(self._meta_path):
-            return None
-        with open(self._meta_path) as f:
-            return json.load(f)["watermark"]
+        meta = pointer.load(self.path, BANDS_META_NAME, None)
+        return None if meta is None else meta["watermark"]
 
     def compact(self) -> None:
         """Materialize the band-key index: one (band, bucket, doc_id)
@@ -217,10 +212,11 @@ class NearDupStore:
             .partitionBy("bucket")
             .parquet(self._bands_path)
         )
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"watermark": int(wm), "n_buckets": self.n_buckets}, f)
-        os.replace(tmp, self._meta_path)
+        pointer.publish(
+            self.path,
+            BANDS_META_NAME,
+            {"watermark": int(wm), "n_buckets": self.n_buckets},
+        )
 
     def purge(self, doc_ids: list[int]) -> int:
         """Right-to-be-forgotten for the signature store: physically

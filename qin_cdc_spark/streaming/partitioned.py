@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from qin_cdc_spark.cdc.apply import latest_by_key
+from qin_cdc_spark.streaming import pointer
 from qin_cdc_spark.streaming.cdc_stream import _align_to_incoming
 from qin_cdc_spark.streaming.versioned import (
     VersionedBucketedTable,
@@ -94,18 +95,14 @@ class PartitionedVersionedTable:
     # -- parent manifest -----------------------------------------------------
 
     def _meta(self) -> dict:
-        p = os.path.join(self.path, PART_META_NAME)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"current": 0, "last_batch_id": -1, "versions": {}}
+        return pointer.load(
+            self.path,
+            PART_META_NAME,
+            {"current": 0, "last_batch_id": -1, "versions": {}},
+        )
 
     def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f".{PART_META_NAME}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, PART_META_NAME))
+        pointer.publish(self.path, PART_META_NAME, meta)
 
     def exists(self) -> bool:
         return bool(self._meta()["versions"])

@@ -35,13 +35,14 @@ Scale design:
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from qin_cdc_spark.streaming import pointer
 
 META_NAME = "_rollup_meta.json"
 MONTH_COL = "_month"
@@ -70,24 +71,15 @@ class RollupStore:
     # -- snapshot pointer --------------------------------------------------
 
     def _meta(self) -> dict:
-        meta = os.path.join(self.path, META_NAME)
-        if os.path.exists(meta):
-            with open(meta) as f:
-                return json.load(f)
-        return {"last_batch_id": -1, "run_id": None, "months": {}}
+        return pointer.load(
+            self.path, META_NAME, {"last_batch_id": -1, "run_id": None, "months": {}}
+        )
 
     def _publish(self, meta: dict) -> None:
         """Atomically flip the snapshot pointer, then GC unreferenced
         data dirs (orphans from crashes or superseded month versions)."""
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f".{META_NAME}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, META_NAME))
-        live = set(meta["months"].values())
-        for d in os.listdir(self.path):
-            if d.startswith("m-") and d not in live:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        pointer.publish(self.path, META_NAME, meta)
+        pointer.sweep(self.path, "m-", set(meta["months"].values()))
 
     def exists(self) -> bool:
         return bool(self._meta()["months"])

@@ -8,8 +8,8 @@ a freshness you apologize for.  The engine already maintains every one
 of those statistics as a retractable MV from the versioned table's
 preimage change feed — this module composes them into one maintainer:
 
-* row count            — ``DerivedAggTable`` (cnt)
-* min / max            — ``DerivedExtremaTable`` (tie-triggered rescan)
+* row count, min / max — ``DerivedExtremaTable`` (cnt counts every
+  row, NULL-valued ones too; tie-triggered rescan for min / max)
 * NDV                  — ``DerivedDistinctTable`` (refcount transitions)
 * quantiles + non-null — ``DerivedQuantileTable`` (histogram, no rescan)
 * null count           — row count − the histogram's non-null total
@@ -34,7 +34,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from qin_cdc_spark.streaming.derived import (
-    DerivedAggTable,
     DerivedDistinctTable,
     DerivedExtremaTable,
     DerivedQuantileTable,
@@ -60,10 +59,6 @@ class IncrementalColumnStats:
         self.group_cols = list(group_cols)
         self.value_col = value_col
         self.bin_width = bin_width
-        self.agg = DerivedAggTable(
-            spark, os.path.join(path, "rows"), group_cols=group_cols,
-            sum_cols=[],
-        )
         self.ext = DerivedExtremaTable(
             spark, os.path.join(path, "ext"), group_cols=group_cols,
             minmax_cols=[value_col],
@@ -81,15 +76,13 @@ class IncrementalColumnStats:
         """Fold the source's new versions into every component; returns
         the applied version.  Each component tracks its own progress, so
         a crash between components resumes idempotently."""
-        v = self.agg.refresh(source)
-        self.ext.refresh(source)
+        v = self.ext.refresh(source)
         self.ndv.refresh(source)
         self.hist.refresh(source)
         return v
 
     def applied_version(self) -> int:
         return min(
-            self.agg.applied_version(),
             self.ext.applied_version(),
             self.ndv.applied_version(),
             self.hist.applied_version(),
@@ -101,7 +94,6 @@ class IncrementalColumnStats:
         so a crash between components heals on the replayed call)."""
         self.group_cols = [mapping.get(c, c) for c in self.group_cols]
         self.value_col = mapping.get(self.value_col, self.value_col)
-        self.agg.rename_columns(mapping)
         self.ext.rename_columns(mapping)
         self.ndv.rename_columns(mapping)
         self.hist.rename_columns(mapping)
@@ -109,28 +101,23 @@ class IncrementalColumnStats:
     def read(self) -> DataFrame | None:
         """(group_cols…, n_rows, n_nulls, n_distinct, min, max,
         p50_ub, p90_ub) — the row a planner or catalog ingests."""
-        rows = self.agg.read()
         ext = self.ext.read()
         ndv = self.ndv.read()
         q = self.hist.quantiles([("p50_ub", 50, 100), ("p90_ub", 90, 100)])
-        if rows is None or ext is None or ndv is None or q is None:
+        if ext is None or ndv is None or q is None:
             return None
         g = self.group_cols
         c = self.value_col
         return (
-            rows.select(*g, F.col("cnt").alias("n_rows"))
+            ext.select(
+                *g,
+                F.col("cnt").alias("n_rows"),
+                F.col(f"min_{c}").alias("min_val"),
+                F.col(f"max_{c}").alias("max_val"),
+            )
             .join(
                 q.select(
                     *g, F.col("n_rows").alias("_nonnull"), "p50_ub", "p90_ub"
-                ),
-                g,
-                "left",
-            )
-            .join(
-                ext.select(
-                    *g,
-                    F.col(f"min_{c}").alias("min_val"),
-                    F.col(f"max_{c}").alias("max_val"),
                 ),
                 g,
                 "left",

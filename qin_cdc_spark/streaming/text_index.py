@@ -44,7 +44,6 @@ neardup_store) extended to lexical retrieval.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 import uuid
@@ -53,6 +52,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from qin_cdc_spark.functions.text import words
+from qin_cdc_spark.streaming import pointer
 from qin_cdc_spark.streaming.versioned import VersionedBucketedTable
 
 BM25_META_NAME = "_bm25_index_meta.json"
@@ -95,24 +95,15 @@ class IncrementalBm25Index:
     # -- meta / io (snapshot-pointer pattern) -------------------------------
 
     def _meta(self) -> dict:
-        p = os.path.join(self.path, BM25_META_NAME)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"applied_version": 0, "buckets": {}, "n_docs": 0, "sum_dl": 0}
+        return pointer.load(
+            self.path,
+            BM25_META_NAME,
+            {"applied_version": 0, "buckets": {}, "n_docs": 0, "sum_dl": 0},
+        )
 
     def _publish(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(
-            self.path, f".{BM25_META_NAME}.tmp-{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, BM25_META_NAME))
-        live = set(meta["buckets"].values())
-        for d in os.listdir(self.path):
-            if d.startswith("tx-") and d not in live:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        pointer.publish(self.path, BM25_META_NAME, meta)
+        pointer.sweep(self.path, "tx-", set(meta["buckets"].values()))
 
     def applied_version(self) -> int:
         return self._meta()["applied_version"]

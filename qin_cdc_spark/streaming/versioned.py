@@ -35,7 +35,6 @@ history the reference does not have.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -45,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from qin_cdc_spark.cdc.apply import latest_by_key
+from qin_cdc_spark.streaming import pointer
 from qin_cdc_spark.streaming.cdc_stream import _align_to_incoming
 
 META_NAME = "_versions_meta.json"
@@ -127,26 +127,18 @@ class VersionedBucketedTable:
     # -- manifest ----------------------------------------------------------
 
     def _meta(self) -> dict:
-        meta = os.path.join(self.path, META_NAME)
-        if os.path.exists(meta):
-            with open(meta) as f:
-                return json.load(f)
-        return {"current": 0, "last_batch_id": -1, "versions": {}}
+        return pointer.load(
+            self.path, META_NAME, {"current": 0, "last_batch_id": -1, "versions": {}}
+        )
 
     def _publish(self, meta: dict) -> None:
         """Atomic pointer flip, then GC data dirs no retained version
         references (orphans from crashed publishes included)."""
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f".{META_NAME}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, META_NAME))
+        pointer.publish(self.path, META_NAME, meta)
         live = {
             d for v in meta["versions"].values() for d in v["buckets"].values()
         }
-        for d in os.listdir(self.path):
-            if d.startswith("d-") and d not in live:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        pointer.sweep(self.path, "d-", live)
 
     def exists(self) -> bool:
         return bool(self._meta()["versions"])

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from qin_cdc_spark.streaming.derived import DerivedAggTable
 from qin_cdc_spark.streaming.versioned import VersionedBucketedTable
@@ -76,22 +77,6 @@ def test_derived_agg_drops_emptied_groups(spark, tmp_path):
     mv.refresh(tbl)
     got = _view(mv)
     assert "solo" not in got and got["dual"] == (1, 7)
-
-
-def test_derived_agg_publish_is_crash_safe(spark, tmp_path):
-    tbl = VersionedBucketedTable(spark, str(tmp_path / "src"), ["id"], n_buckets=4)
-    mv = DerivedAggTable(
-        spark, str(tmp_path / "mv"), group_cols=["grp"], sum_cols=["amt"]
-    )
-    tbl.merge(_changes(spark, [("insert", 1, 1, "g", 5)]))
-    mv.refresh(tbl)
-    # orphan data dir from a crashed refresh is GC'd on the next publish
-    orphan = os.path.join(mv.path, "agg-deadbeef0000")
-    os.makedirs(orphan)
-    tbl.merge(_changes(spark, [("insert", 2, 2, "g", 6)]))
-    mv.refresh(tbl)
-    assert not os.path.exists(orphan)
-    assert _view(mv) == {"g": (2, 11)}
 
 
 def test_derived_mv_refreshes_inside_the_stream(spark, tmp_path):
@@ -573,18 +558,6 @@ def test_extrema_random_mutations_match_full_recompute(spark, tmp_path):
         assert _ext_view(mv) == _ext_recompute(tbl)
 
 
-def test_extrema_publish_is_crash_safe(spark, tmp_path):
-    tbl, mv = _mk_ext(spark, tmp_path)
-    tbl.merge(_ext_changes(spark, [("insert", 1, 1, "g", 5)]))
-    mv.refresh(tbl)
-    orphan = os.path.join(mv.path, "ext-deadbeef0000")
-    os.makedirs(orphan)
-    tbl.merge(_ext_changes(spark, [("insert", 2, 2, "g", 9)]))
-    mv.refresh(tbl)
-    assert not os.path.exists(orphan)
-    assert _ext_view(mv) == {"g": (2, 5, 9)}
-
-
 def test_extrema_mv_refreshes_inside_the_stream(spark, tmp_path):
     """post_batch hook parity with the agg/join MVs: the extrema view
     refreshes within each micro-batch of a running CDC stream over a
@@ -829,9 +802,7 @@ def test_distinct_touches_only_delta_buckets(spark, tmp_path):
     assert _dd_view(mv) == _dd_recompute(tbl)
 
 
-def test_distinct_drops_emptied_groups_and_is_crash_safe(spark, tmp_path):
-    import os
-
+def test_distinct_drops_emptied_groups(spark, tmp_path):
     tbl, mv = _mk_dd(spark, tmp_path)
     tbl.merge(
         _dd_changes(
@@ -839,11 +810,8 @@ def test_distinct_drops_emptied_groups_and_is_crash_safe(spark, tmp_path):
         )
     )
     mv.refresh(tbl)
-    orphan = os.path.join(mv.path, "ru-deadbeef0000")
-    os.makedirs(orphan)
     tbl.merge(_dd_changes(spark, [("delete", 10, 1, "solo", "x")]))
     mv.refresh(tbl)
-    assert not os.path.exists(orphan)  # publish GC
     assert _dd_view(mv) == {"dual": 1}
 
 
@@ -1123,20 +1091,6 @@ def test_quantile_random_mutations_match_full_recompute(spark, tmp_path):
         assert _qt_state(mv) == _qt_recompute_bins(tbl, 25)
 
 
-def test_quantile_publish_is_crash_safe(spark, tmp_path):
-    import os
-
-    tbl, mv = _mk_qt(spark, tmp_path)
-    tbl.merge(_qt_changes(spark, [("insert", 1, 1, "g", 5)]))
-    mv.refresh(tbl)
-    orphan = os.path.join(mv.path, "qb-deadbeef0000")
-    os.makedirs(orphan)
-    tbl.merge(_qt_changes(spark, [("insert", 2, 2, "g", 6)]))
-    mv.refresh(tbl)
-    assert not os.path.exists(orphan)  # publish GC
-    assert _qt_state(mv) == _qt_recompute_bins(tbl, 10)
-
-
 # -- DerivedTopKTable ----------------------------------------------------------
 
 
@@ -1383,18 +1337,75 @@ def test_topk_random_mutations_match_full_recompute(spark, tmp_path):
         assert _tk_view(mv) == _tk_recompute(tbl, 3)
 
 
-def test_topk_publish_is_crash_safe(spark, tmp_path):
-    import os
+# -- failed pointer flip, every pointer view ------------------------------------
 
-    tbl, mv = _mk_tk(spark, tmp_path)
-    tbl.merge(_tk_changes(spark, [("insert", 1, 1, "g", 5)]))
+
+def _mk_agg(spark, tmp_path):
+    tbl = VersionedBucketedTable(spark, str(tmp_path / "src"), ["id"], n_buckets=4)
+    mv = DerivedAggTable(
+        spark, str(tmp_path / "mv"), group_cols=["grp"], sum_cols=["amt"]
+    )
+    return tbl, mv
+
+
+# kind → (make (source, view), change rows, view contents, full recompute);
+# change rows are (op, seq, id, grp, int value)
+_POINTER_VIEWS = {
+    "agg": (_mk_agg, _changes, _view, _recompute),
+    "extrema": (_mk_ext, _ext_changes, _ext_view, _ext_recompute),
+    "quantile": (_mk_qt, _qt_changes, _qt_state, lambda t: _qt_recompute_bins(t, 10)),
+    "distinct": (
+        _mk_dd,
+        lambda s, rows: _dd_changes(s, [(*r[:4], str(r[4])) for r in rows]),
+        _dd_view,
+        _dd_recompute,
+    ),
+    "topk": (_mk_tk, _tk_changes, _tk_view, lambda t: _tk_recompute(t, 2)),
+}
+
+
+@pytest.mark.parametrize("kind", list(_POINTER_VIEWS))
+def test_pointer_view_survives_failed_flip(spark, tmp_path, monkeypatch, kind):
+    """The pointer flip fails once, after the refresh wrote its data:
+    the view keeps serving its pre-crash state and version, and the
+    replayed refresh equals the full recompute and leaves no data dir
+    the live pointer does not name."""
+    from qin_cdc_spark.streaming import pointer
+
+    make, changes, view, recompute = _POINTER_VIEWS[kind]
+    tbl, mv = make(spark, tmp_path)
+    tbl.merge(changes(spark, [
+        ("insert", 1, 1, "g", 5), ("insert", 2, 2, "g", 9), ("insert", 3, 3, "h", 7),
+    ]))
     mv.refresh(tbl)
-    orphan = os.path.join(mv.path, "tk-deadbeef0000")
-    os.makedirs(orphan)
-    tbl.merge(_tk_changes(spark, [("insert", 2, 2, "g", 6)]))
-    mv.refresh(tbl)
-    assert not os.path.exists(orphan)  # publish GC
-    assert _tk_view(mv) == _tk_recompute(tbl, 2)
+    before, v_before = view(mv), mv.applied_version()
+    dirs_before = set(os.listdir(mv.path))
+    # empty g (delete its minimum, move its other row to h), grow h
+    tbl.merge(changes(spark, [
+        ("delete", 10, 1, "g", 5), ("update", 11, 2, "h", 4), ("insert", 12, 4, "h", 11),
+    ]))
+
+    real, failed = pointer.publish, []
+
+    def flip_fails_once(*args):
+        if not failed:
+            failed.append(args)
+            raise RuntimeError("crash at the pointer flip")
+        real(*args)
+
+    monkeypatch.setattr(pointer, "publish", flip_fails_once)
+    with pytest.raises(RuntimeError, match="pointer flip"):
+        mv.refresh(tbl)
+    assert set(os.listdir(mv.path)) - dirs_before  # the crash left its data
+    assert view(mv) == before
+    assert mv.applied_version() == v_before
+
+    assert mv.refresh(tbl) == tbl.current_version()
+    assert view(mv) == recompute(tbl)
+    meta = mv._meta()
+    live = {meta.get("data"), meta.get("rollup"), *meta.get("buckets", {}).values()}
+    dirs = {d for d in os.listdir(mv.path) if os.path.isdir(os.path.join(mv.path, d))}
+    assert dirs == live - {None}
 
 
 def test_quantile_and_topk_mvs_refresh_inside_the_stream(spark, tmp_path):

@@ -1,6 +1,6 @@
 """IncrementalColumnStats (streaming/stats.py): ANALYZE-style column
 stats maintained O(delta) from the versioned CDF — composition of the
-agg/extrema/distinct/quantile MVs into one stats row."""
+extrema/distinct/quantile MVs into one stats row."""
 
 from __future__ import annotations
 
@@ -114,8 +114,8 @@ def test_stats_resume_after_partial_refresh(spark, tmp_path):
     tbl.merge(_changes(spark, [("insert", 1, 1, "g", 5), ("insert", 2, 2, "g", 9)]))
     st.refresh(tbl)
     tbl.merge(_changes(spark, [("delete", 10, 2, "g", 9), ("insert", 11, 3, "g", 13)]))
-    st.agg.refresh(tbl)  # "crash" after the first component
+    st.ext.refresh(tbl)  # "crash" after the first component
     assert st.applied_version() == 1  # stragglers pin the floor
-    st.refresh(tbl)  # agg no-ops on its guard; the rest catch up
+    st.refresh(tbl)  # ext no-ops on its guard; the rest catch up
     assert st.applied_version() == 2
     assert _view(st) == _recompute(tbl, 10)
