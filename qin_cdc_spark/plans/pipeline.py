@@ -16,6 +16,7 @@ The reference's sink zoo maps to:
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pyspark.sql.functions as F
@@ -28,6 +29,7 @@ from qin_cdc_spark.streaming.cdc_stream import (
     DEFAULT_N_BUCKETS,
     CdcStreamRoute,
     file_envelope_stream,
+    run_concurrently,
     start_cdc_stream,
 )
 
@@ -229,7 +231,16 @@ class Pipeline:
     ):
         """Start the streaming apply across all routes.  With no
         explicit trigger, the config's batch-interval-ms applies
-        (availableNow fallback when the config sets none)."""
+        (availableNow fallback when the config sets none).
+
+        Each micro-batch runs in three steps: the routes apply
+        concurrently, then every declared view refreshes concurrently,
+        then the coordinator records the batch.  A step waits for all
+        of its calls; if one raised, the micro-batch fails with the
+        first error after the rest have returned, and the restart from
+        the checkpoint replays the batch (a landed store skips it by its
+        batch guard or re-merges it idempotently; views catch up from
+        their applied version).  See ``cdc_stream.run_concurrently``."""
         if trigger is None:
             trigger = self.trigger_config()
         hooks = []
@@ -263,9 +274,16 @@ class Pipeline:
         )
 
     def _refresh_mviews(self, batch_id: int) -> None:
-        for route, mv in self.mviews.values():
-            if route.target is not None and route.target.exists():
-                mv.refresh(route.target)
+        # views read only their route's landed store: none waits on
+        # another, so they refresh concurrently
+        run_concurrently(
+            self.spark,
+            [
+                functools.partial(mv.refresh, route.target)
+                for route, mv in self.mviews.values()
+                if route.target is not None and route.target.exists()
+            ],
+        )
 
     def read_mview(self, name: str):
         """The current contents of a declared materialized view."""
@@ -286,8 +304,15 @@ class Pipeline:
         if ddl_rows:
             _apply_ddl_rows_to_registry(ddl_rows, self.registry)
             envelope = envelope.filter(F.col("op") != "ddl")
-        for route in self.routes:
-            route.apply_batch(envelope, ddl_rows=ddl_rows or None)
+        run_concurrently(
+            self.spark,
+            [
+                functools.partial(
+                    route.apply_batch, envelope, ddl_rows=ddl_rows or None
+                )
+                for route in self.routes
+            ],
+        )
         if self.mviews:
             self._refresh_mviews(-1)
 

@@ -22,11 +22,14 @@ per-batch cost scales with touched files, not table size.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -1681,6 +1684,34 @@ class CdcStreamRoute:
         return self.target
 
 
+def run_concurrently(spark: SparkSession, calls: list) -> None:
+    """Run independent zero-argument calls at once — the concurrent
+    stages of the reference's pipeline (app/server.go:158-166) applied
+    to one micro-batch's routes, or to its views once every route has
+    landed.  Each call's Spark jobs run side by side on the shared
+    executors, so the batch costs its slowest call instead of the sum.
+
+    Error contract: every call runs to completion before this returns;
+    then the first failed call's error (in list order) is re-raised, so
+    a failing micro-batch never leaves a store write running behind it
+    and the replay meets each store either landed or untouched.  The
+    pool has ``min(len(calls), defaultParallelism)`` threads, exists
+    only for the duration of the call, and each thread inherits the
+    caller's Spark local properties (job group, description, scheduler
+    pool), so cancelling the stream cancels their jobs too.  One call
+    runs inline."""
+    if len(calls) <= 1:
+        for call in calls:
+            call()
+        return
+    n = min(len(calls), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=n, thread_name_prefix="qin-fanout") as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    # leaving the block joined every thread: all calls have returned
+    for f in futures:
+        f.result()
+
+
 def start_cdc_stream(
     spark: SparkSession,
     envelope_stream: DataFrame,
@@ -1694,7 +1725,13 @@ def start_cdc_stream(
 ):
     """Start the streaming apply: one foreachBatch fanning out to every
     route (per-table grouping, A21 analog — each route filters its own
-    (db, table) slice of the batch).
+    (db, table) slice of the batch).  The routes apply CONCURRENTLY
+    (``run_concurrently``): no route reads another's store, so the
+    batch's store work costs its slowest route.  A route that raises
+    fails the micro-batch only after every other route has returned;
+    the restart replays the batch, which each landed store's batch
+    guard (or its idempotent LWW merge) absorbs.  ``post_batch`` runs
+    after every route has landed.
 
     With a ``registry``, ``op='ddl'`` control rows are applied to it (in
     seq order, batch-id idempotent) BEFORE the DML fan-out, and each
@@ -1759,8 +1796,18 @@ def start_cdc_stream(
                             # retention is gc(keep_last=…), not tombstone GC
                             if tgt.exists() and hasattr(tgt, "gc_tombstones"):
                                 tgt.gc_tombstones(low)
-            for route in routes:
-                route.apply_batch(batch_df, batch_id=batch_id, ddl_rows=ddl_rows or None)
+            run_concurrently(
+                spark,
+                [
+                    functools.partial(
+                        route.apply_batch,
+                        batch_df,
+                        batch_id=batch_id,
+                        ddl_rows=ddl_rows or None,
+                    )
+                    for route in routes
+                ],
+            )
             # downstream maintenance (derived MVs, index refresh) runs
             # INSIDE the micro-batch, after every route applied: a crash
             # replays the whole batch and both the LWW merge and any

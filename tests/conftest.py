@@ -32,6 +32,22 @@ def spark():
     spark.stop()
 
 
+def _last_job_id(spark) -> int:
+    """Id of the newest Spark job the session has started (-1 before
+    any).  Count an operation's jobs as the difference of this id after
+    and before it: job ids are sequential, while the retained job list
+    is capped (``spark.ui.retainedJobs``), so its size undercounts."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def count_jobs(spark, fn, *args, **kwargs) -> int:
+    """Spark jobs ``fn(*args, **kwargs)`` runs, by job-id delta."""
+    before = _last_job_id(spark)
+    fn(*args, **kwargs)
+    return _last_job_id(spark) - before
+
+
 @pytest.fixture(scope="session")
 def duck():
     from qin_cdc_spark.testing import duckdb_conn

@@ -33,6 +33,7 @@ from qin_cdc_spark.streaming.cdc_stream import (
     envelope_from_egress,
 )
 from qin_cdc_spark.streaming.versioned import VersionedBucketedTable
+from tests.conftest import count_jobs
 
 
 def _changes(spark, rows):
@@ -367,11 +368,6 @@ def test_partitioned_merge_single_write_matches_lww(
     assert tbl.current_version() == v
 
 
-def _job_ids(spark) -> set[int]:
-    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-    return {jobs.apply(i).jobId() for i in range(jobs.size())}
-
-
 def test_partitioned_merge_jobs_independent_of_partition_count(spark, tmp_path):
     """One grouped write per batch: a one-partition batch and a
     three-partition batch of the same schema run the same number of
@@ -386,9 +382,7 @@ def test_partitioned_merge_jobs_independent_of_partition_count(spark, tmp_path):
 
     def jobs_of(rows, batch_id):
         batch = spark.createDataFrame(rows, _PART_SCH)
-        seen = _job_ids(spark)
-        tbl.merge(batch, batch_id=batch_id)
-        return len(_job_ids(spark) - seen)
+        return count_jobs(spark, tbl.merge, batch, batch_id=batch_id)
 
     one = jobs_of(
         [("update", 100 + i, i, 1990, f"w{i}") for i in (3, 6, 12)], 1

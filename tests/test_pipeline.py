@@ -3,7 +3,12 @@ apply → query the synced targets (the reference's full server loop)."""
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import StreamingQueryException
 
 from qin_cdc_spark.cdc.changestream import orders_change_stream
 from qin_cdc_spark.cdc.envelope import envelope_from_typed
@@ -819,3 +824,153 @@ target-table = "ods_t"
     got = {(r.k, r.w) for r in pipe.read_target("dw", "ods_t").collect()}
     assert got == {(1, "a2"), (2, "b")}
     assert [f.name for f in pipe.registry.get("src", "t").fields] == ["k", "w"]
+
+
+FANOUT_CONFIG = """
+name = "fanout"
+
+[input]
+type = "mysql"
+
+[output]
+type = "starrocks"
+
+[[output.config.routers]]
+source-schema = "src"
+source-table = "a"
+
+[[output.config.routers]]
+source-schema = "src"
+source-table = "b"
+
+[[materialized-views]]
+name = "a_by_grp"
+type = "keyed-agg"
+source-schema = "src"
+source-table = "a"
+[materialized-views.config]
+group-cols = ["grp"]
+sum-cols = ["val"]
+"""
+
+
+@pytest.mark.parametrize("failing", ["route", "view"])
+def test_fanout_fails_after_every_call_and_restart_converges(
+    spark, tmp_path, failing
+):
+    """Routes, and then views, apply concurrently.  When one call raises
+    once, the micro-batch fails only after the other calls have
+    returned, no pool thread outlives the batch, and a restart from the
+    same checkpoint lands both targets and the view equal to the
+    oracle."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    a_rows = [
+        [("insert", i, i, "g%d" % (i % 2), i * 10) for i in range(1, 7)],
+        [("update", 20, 1, "g1", 99), ("delete", 21, 2, "g0", 20),
+         ("insert", 22, 30, "g0", 5)],
+    ]
+    b_rows = [
+        [("insert", 100 + i, i, "n%d" % i) for i in range(1, 5)],
+        [("update", 200, 1, "m1"), ("delete", 201, 3, "n3")],
+    ]
+    env_dir = str(tmp_path / "envelope")
+    for ab, bb in zip(a_rows, b_rows):
+        a = spark.createDataFrame(ab, "op string, seq long, id long, grp string, val long")
+        b = spark.createDataFrame(bb, "op string, seq long, id long, name string")
+        envelope_from_typed(
+            a.select("id", "grp", "val", "op", "seq"), db="src", table="a"
+        ).unionByName(
+            envelope_from_typed(b.select("id", "name", "op", "seq"), db="src", table="b")
+        ).coalesce(1).write.mode("append").parquet(env_dir)
+
+    def compile_():
+        return compile_pipeline(
+            spark,
+            FANOUT_CONFIG,
+            schemas={
+                ("src", "a"): _parse_datatype_string("id long, grp string, val long"),
+                ("src", "b"): _parse_datatype_string("id long, name string"),
+            },
+            primary_keys={("src", "a"): ["id"], ("src", "b"): ["id"]},
+            target_root=str(tmp_path / "targets"),
+            n_buckets=4,
+        )
+
+    def run(pipe):
+        return pipe.run_stream(
+            file_envelope_stream(spark, env_dir, max_files_per_trigger=1),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+
+    pipe = compile_()
+    returned = []  # calls in the order they returned or raised
+
+    def fail_once(fn):
+        def call(*args, **kwargs):
+            if "raised" not in returned:
+                returned.append("raised")
+                raise RuntimeError("injected failure")
+            return fn(*args, **kwargs)
+
+        return call
+
+    def slow(fn, name):
+        # the other call is still running when the failure is raised
+        def call(*args, **kwargs):
+            time.sleep(1.0)
+            fn(*args, **kwargs)
+            returned.append(name)
+
+        return call
+
+    route_a, route_b = pipe.routes
+    if failing == "route":
+        route_b.apply_batch = fail_once(route_b.apply_batch)
+        route_a.apply_batch = slow(route_a.apply_batch, "a")
+    else:
+        mv = pipe.mviews["a_by_grp"][1]
+        mv.refresh = fail_once(mv.refresh)
+    q = run(pipe)
+    with pytest.raises(StreamingQueryException, match="injected failure"):
+        q.awaitTermination(300)
+    if failing == "route":
+        # the failing route raised first; the other one had returned
+        assert returned == ["raised", "a"]
+        assert route_a.target.current_version() == 1
+    else:
+        # both routes landed batch 0 before the view step ran
+        assert returned == ["raised"]
+        assert pipe.read_target("src", "a").count() == 6
+        assert pipe.read_target("src", "b").count() == 4
+    assert not [t for t in threading.enumerate() if t.name.startswith("qin-fanout")]
+
+    # restart from the same checkpoint: the failed batch replays
+    pipe = compile_()
+    q = run(pipe)
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+
+    def lww(batches, width):
+        state = {}
+        for op, _, k, *vals in sorted(
+            (r for bt in batches for r in bt), key=lambda r: r[1]
+        ):
+            if op == "delete":
+                state.pop(k, None)
+            else:
+                state[k] = tuple(vals[:width])
+        return state
+
+    want_a, want_b = lww(a_rows, 2), lww(b_rows, 1)
+    got_a = {r.id: (r.grp, r.val) for r in pipe.read_target("src", "a").collect()}
+    got_b = {r.id: (r.name,) for r in pipe.read_target("src", "b").collect()}
+    assert (got_a, got_b) == (want_a, want_b)
+    want_mv: dict = {}
+    for grp, val in want_a.values():
+        cnt, s = want_mv.get(grp, (0, 0))
+        want_mv[grp] = (cnt + 1, s + val)
+    got_mv = {
+        r.grp: (r.cnt, r.sum_val) for r in pipe.read_mview("a_by_grp").collect()
+    }
+    assert got_mv == want_mv

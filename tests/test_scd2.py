@@ -10,10 +10,15 @@ pure-Python interval folding.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 from qin_cdc_spark.streaming.scd2 import ScdType2Table, scd2_intervals, temporal_join
+from qin_cdc_spark.streaming.versioned import META_NAME, VersionedBucketedTable
+from tests.conftest import count_jobs
 
 
 def _ev(spark, rows):
@@ -99,8 +104,35 @@ def test_replay_idempotent_both_guards(spark, tmp_path):
     assert _hist_rows(scd) == before
     # overlap WITHOUT a batch id: the per-key high-water mark drops
     # already-folded events (at-least-once suffix replay)
+    v = scd.store.current_version()
     scd.apply_batch(_ev(spark, BATCH1 + BATCH2))
     assert _hist_rows(scd) == before
+    # a fully redelivered batch mints no version
+    assert scd.store.current_version() == v
+
+
+def test_steady_state_apply_jobs_near_plain_merge(spark, tmp_path):
+    """A steady-state history apply (stored keys, one redelivered
+    event, one new key) costs at most twice the Spark jobs of a plain
+    versioned merge of the same batch: the batch and the touched
+    buckets' stored rows go through one window, not a plan of joins
+    the store's probe re-evaluates branch by branch."""
+    batch = [
+        ("update", 20, 1, "dup"),  # redelivered: k=1's hwm is 20
+        ("update", 50, 2, "b3"),
+        ("update", 51, 3, "c3"),
+        ("insert", 60, 9, "z"),  # a new key
+    ]
+    scd = ScdType2Table(spark, str(tmp_path / "h"), keys=["k"], n_buckets=4)
+    scd.apply_batch(_ev(spark, BATCH1), batch_id=0)
+    plain = VersionedBucketedTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4)
+    plain.merge(_ev(spark, BATCH1), batch_id=0)
+
+    scd_jobs = count_jobs(spark, scd.apply_batch, _ev(spark, batch), batch_id=1)
+    merge_jobs = count_jobs(spark, plain.merge, _ev(spark, batch), batch_id=1)
+    assert merge_jobs > 0
+    assert scd_jobs <= 2 * merge_jobs, (scd_jobs, merge_jobs)
+    assert _hist_rows(scd) == _intervals_py(BATCH1 + batch[1:])
 
 
 def test_initial_delete_records_tombstone_and_late_event_dropped(spark, tmp_path):
@@ -285,6 +317,38 @@ def test_temporal_join_pruned_opens_fact_buckets_only(spark, tmp_path):
     # parity with the full-history module-level join
     full = temporal_join(facts, scd.read_history(), ["k"], "asof", how="left")
     assert {(r.k, r.asof, r.v) for r in full.collect()} == got
+
+
+@pytest.mark.parametrize("legacy", [False, True])
+def test_keys_hash_under_stored_types(spark, tmp_path, legacy):
+    """Every bucket lookup hashes keys under the STORED key types (the
+    hash is type-sensitive): taken from the manifest's recorded schema,
+    or from the files on a legacy manifest that records none.  Int-typed
+    facts, point reads and events then find their long-keyed history."""
+    path = str(tmp_path / "h")
+    rows = [("insert", 10 + i, i, f"v{i}") for i in range(1, 9)]
+    ScdType2Table(spark, path, keys=["k"], n_buckets=8).apply_batch(
+        _ev(spark, rows), batch_id=0
+    )
+    if legacy:
+        meta_path = os.path.join(path, META_NAME)
+        with open(meta_path) as f:
+            meta = json.load(f)
+        for man in meta["versions"].values():
+            man.pop("schema", None)
+        with open(meta_path, "w") as f:
+            json.dump(meta, f)
+    scd = ScdType2Table(spark, path, keys=["k"], n_buckets=8)
+    facts = spark.createDataFrame([(i, 100) for i in range(1, 9)], "k int, ts long")
+    got = {(r.k, r.v) for r in scd.temporal_join(facts, "ts").collect()}
+    assert got == {(i, f"v{i}") for i in range(1, 9)}
+    assert [r.v for r in scd.history_of([3]).collect()] == ["v3"]
+    later = [("update", 50 + i, i, f"w{i}") for i in range(1, 9)]
+    scd.apply_batch(
+        spark.createDataFrame(later, "op string, seq long, k int, v string"),
+        batch_id=1,
+    )
+    assert _hist_rows(scd) == _intervals_py(rows + later)
 
 
 def test_dlq_replay_folds_into_history(spark, tmp_path):
