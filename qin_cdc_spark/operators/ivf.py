@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from qin_cdc_spark.functions.vectors import cosine
 from qin_cdc_spark.sources.tables import load_table
+from qin_cdc_spark.streaming import pointer
 
 K_CLUSTERS = 16
 N_ITERS = 5
@@ -386,7 +387,7 @@ class IvfIndex:
         the standard IVF trade-off; rebuild() when recall decays."""
         self._assigned(vectors_df).select(
             "vec_id", "embedding", "cluster"
-        ).write.mode("append").partitionBy("cluster").parquet(f"{self.path}/corpus")
+        ).write.mode("append").partitionBy("cluster").parquet(self._corpus_dir())
 
     def apply_cdf(self, changes: DataFrame) -> None:
         """Index MAINTENANCE from a change-data-feed batch — closes the
@@ -403,8 +404,8 @@ class IvfIndex:
         (assignment under fixed centroids is deterministic), so no
         corpus scan is needed to locate rows to remove.  Touched
         partitions = old ∪ new clusters; each is rewritten as
-        (existing − removed vec_ids) ∪ new rows via staged write +
-        per-partition directory swap (the BucketedUpsertTable pattern).
+        (existing − changed vec_ids) ∪ new rows via staged write +
+        per-partition ``pointer.swap``, so a replayed batch converges.
         Invariant (tested): the maintained corpus equals a full
         re-assignment of the current snapshot under the same centroids.
         """
@@ -438,11 +439,11 @@ class IvfIndex:
             )
             if not touched:
                 return
-            corpus = f"{self.path}/corpus"
+            corpus = self._corpus_dir()
             keep = (
                 spark.read.parquet(corpus)
                 .filter(F.col("cluster").isin([int(c) for c in touched]))
-                .join(old_rows.select("vec_id"), "vec_id", "left_anti")
+                .join(changes.select("vec_id").distinct(), "vec_id", "left_anti")
             )
             merged = keep.select("vec_id", "embedding", "cluster").unionByName(
                 new_rows
@@ -451,15 +452,10 @@ class IvfIndex:
             stage = f"{corpus}.stage-{uuid.uuid4().hex[:8]}"
             merged.write.partitionBy("cluster").parquet(stage)
             for c in touched:
-                src = os.path.join(stage, f"cluster={c}")
-                dst = os.path.join(corpus, f"cluster={c}")
-                old = f"{dst}.old-{uuid.uuid4().hex[:6]}"
-                if os.path.exists(dst):
-                    os.rename(dst, old)
-                if os.path.exists(src):
-                    os.rename(src, dst)
-                if os.path.exists(old):
-                    shutil.rmtree(old)
+                pointer.swap(
+                    os.path.join(stage, f"cluster={c}"),
+                    os.path.join(corpus, f"cluster={c}"),
+                )
             shutil.rmtree(stage, ignore_errors=True)
             new_rows.unpersist()
             old_rows.unpersist()
@@ -491,8 +487,15 @@ class IvfIndex:
             "cluster int, cvec array<double>",
         )
 
+    def _corpus_dir(self) -> str:
+        """The cluster-partitioned corpus dir, with a crashed partition
+        swap repaired first."""
+        corpus = f"{self.path}/corpus"
+        pointer.recover(corpus)
+        return corpus
+
     def corpus(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(f"{self.path}/corpus")
+        return spark.read.parquet(self._corpus_dir())
 
 
 def ivf_search(

@@ -45,6 +45,7 @@ from qin_cdc_spark.functions.text import (
     shingle_hashes,
     word_shingles,
 )
+from qin_cdc_spark.streaming import pointer
 
 N_MINHASH = 64
 N_BANDS = 16
@@ -113,6 +114,9 @@ class LshBandIndex:
         return False
 
     def read(self) -> DataFrame:
+        """The index rows, with a crashed partition swap repaired first
+        (its leftover copy would read as a bogus bucket value)."""
+        pointer.recover(self.path)
         return self.spark.read.parquet(self.path)
 
     def candidate_pairs(self) -> DataFrame:
@@ -143,7 +147,7 @@ class LshBandIndex:
         Stale rows are recomputed ROW-LOCALLY from the preimage text;
         touched partitions = buckets of (old ∪ new) band keys, each
         rewritten as (existing − changed doc_ids) ∪ new rows via staged
-        write + per-partition dir swap.  Invariant (tested): the
+        write + per-partition ``pointer.swap``.  Invariant (tested): the
         maintained index equals a fresh build of the post-change
         snapshot."""
         changes = changes.persist()
@@ -183,14 +187,10 @@ class LshBandIndex:
                 stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
                 merged.write.partitionBy("bucket").parquet(stage)
                 for b in touched:
-                    src = os.path.join(stage, f"bucket={b}")
-                    dst = os.path.join(self.path, f"bucket={b}")
-                    old = f"{dst}.old-{uuid.uuid4().hex[:8]}"
-                    if os.path.isdir(dst):
-                        os.rename(dst, old)
-                    if os.path.isdir(src):
-                        os.rename(src, dst)
-                    shutil.rmtree(old, ignore_errors=True)
+                    pointer.swap(
+                        os.path.join(stage, f"bucket={b}"),
+                        os.path.join(self.path, f"bucket={b}"),
+                    )
                 shutil.rmtree(stage, ignore_errors=True)
             finally:
                 new_rows.unpersist()

@@ -9,7 +9,7 @@ Structured Streaming replaces the channel plumbing — one foreachBatch
 fans the batch out to every route (per-table grouping, A21).
 
 The reference's sink zoo maps to:
-- starrocks/doris/mysql → ParquetUpsertTable locally (MERGE-capable
+- starrocks/doris/mysql → BucketedUpsertTable locally (MERGE-capable
   table in production) or apply_batch_dbapi for DB-API targets
 - kafka → sinks/kafka.py formatters + write_kafka_stream
 """
@@ -45,7 +45,7 @@ class Pipeline:
         *,
         primary_keys: dict[tuple[str, str], list[str]],
         target_root: str,
-        n_buckets: int | None = DEFAULT_N_BUCKETS,
+        n_buckets: int = DEFAULT_N_BUCKETS,
     ) -> None:
         self.spark = spark
         self.config = config
@@ -397,7 +397,7 @@ def compile_pipeline(
     schemas: dict[tuple[str, str], StructType],
     primary_keys: dict[tuple[str, str], list[str]],
     target_root: str,
-    n_buckets: int | None = DEFAULT_N_BUCKETS,
+    n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> Pipeline:
     """Parse config and bind schemas (the engine-side stand-in for the
     reference's live `show create table` meta load, A8)."""

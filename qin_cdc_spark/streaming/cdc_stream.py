@@ -13,11 +13,12 @@ batch; the merge itself is idempotent under replay (max-seq wins), so
 at-least-once re-delivery after a crash — the reference's model,
 inputs/mysql/mysql_position.go:150-170 — converges to the same state.
 
-Sink note: locally the target is a parquet directory swapped atomically
-per batch (read-merge-rewrite).  On a production deployment the target
-is a Delta/Iceberg table and the body of ``_merge_batch`` becomes a
-``MERGE INTO`` — file-skipping on pk statistics replaces the rewrite, so
-per-batch cost scales with touched files, not table size.
+Sink note: locally the target is a bucketed parquet directory whose
+touched buckets are swapped in per batch (read-merge-rewrite).  On a
+production deployment the target is a Delta/Iceberg table and the body
+of ``_merge_batch`` becomes a ``MERGE INTO`` — file-skipping on pk
+statistics replaces the rewrite, so per-batch cost scales with touched
+files, not table size.
 """
 
 from __future__ import annotations
@@ -37,9 +38,8 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 from qin_cdc_spark.cdc.apply import decode_envelope, latest_by_key
 from qin_cdc_spark.streaming import pointer
 
-# Routes default to the bucketed target: per-batch merge cost must scale
-# with |batch keys|, not |table| — the flat full-rewrite table is the
-# explicit opt-out (n_buckets=0) for tiny reference/dimension tables.
+# Bucket count of every route's store: per-batch merge cost scales with
+# |batch keys|, not |table|.
 DEFAULT_N_BUCKETS = 32
 
 
@@ -595,9 +595,15 @@ def compact_egress(spark: SparkSession, egress_dir: str) -> tuple[int, int] | No
     return None
 
 
-class ParquetUpsertTable:
-    """A primary-keyed table materialized as a parquet directory with
-    atomic swap-on-write — the local stand-in for a MERGE-capable sink.
+class BucketedUpsertTable:
+    """A primary-keyed table materialized as a hash-bucketed parquet
+    directory — the local stand-in for a MERGE-capable sink.  Rows land
+    in ``_bucket=pmod(hash(pk), N)`` partitions and a merge rewrites
+    ONLY the buckets touched by the batch — per-batch cost scales with
+    |batch keys| not |table| (PLANS.md gap #1).  This is the parquet
+    stand-in for what Delta/Iceberg MERGE achieves with file-skipping on
+    PK statistics; the same hash-bucket layout also makes target-side
+    joins co-located.
 
     Cross-batch ordering guard (SURVEY §7 "hard parts"): the table
     persists ``_seq`` (the max applied event seq per key) and keeps
@@ -610,185 +616,7 @@ class ParquetUpsertTable:
     idempotent and order-insensitive across batches.  Tombstones are
     GC-able once the source can no longer redeliver below their seq
     (the reference's 3-second position-lag window,
-    inputs/mysql/mysql_position.go:150-170)."""
-
-    def __init__(self, spark: SparkSession, path: str, keys: list[str]):
-        self.spark = spark
-        self.path = path
-        self.keys = keys
-
-    def exists(self) -> bool:
-        """True only if the table holds actual data files: an all-
-        quarantined (empty) first batch writes a directory with no
-        parquet parts, and reading that explodes with
-        UNABLE_TO_INFER_SCHEMA — treat it as not-yet-created so the
-        next merge takes the bootstrap path."""
-        self._recover()
-        if not os.path.isdir(self.path):
-            return False
-        for _root, _dirs, files in os.walk(self.path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    def _recover(self) -> None:
-        """Crash-window repair.  A swap renames live → ``.old-*`` then
-        staged → live; dying between the two renames leaves only the
-        ``.old-*`` copy (of the whole table, or of one bucket directory
-        in the bucketed subclass).  Restore it before any read or merge,
-        so the at-least-once replay sees the pre-crash state instead of
-        a missing table/bucket."""
-        parent, name = os.path.split(self.path.rstrip("/"))
-        if parent and os.path.isdir(parent) and not os.path.exists(self.path):
-            olds = sorted(
-                d for d in os.listdir(parent) if d.startswith(name + ".old-")
-            )
-            if olds:
-                os.rename(os.path.join(parent, olds[-1]), self.path)
-        if os.path.isdir(self.path):
-            for d in os.listdir(self.path):
-                if ".old-" not in d:
-                    continue
-                base = os.path.join(self.path, d.split(".old-")[0])
-                src = os.path.join(self.path, d)
-                if os.path.exists(base):
-                    shutil.rmtree(src, ignore_errors=True)  # swap completed
-                else:
-                    os.rename(src, base)  # swap died mid-flight: restore
-
-    def read(self) -> DataFrame | None:
-        """Visible rows (tombstones and bookkeeping columns hidden)."""
-        full = self.read_internal()
-        if full is None:
-            return None
-        return full.filter(~F.col("_deleted")).drop("_seq", "_deleted")
-
-    def read_internal(self) -> DataFrame | None:
-        if not self.exists():
-            return None
-        # PLAIN read is safe on the FLAT table: every merge is a whole-
-        # directory rewrite, so the files are always schema-uniform.
-        # (The bucketed subclass rewrites only touched buckets and
-        # reads through its schema manifest instead.)
-        return self.spark.read.parquet(self.path)
-
-    def merge(self, changes: DataFrame, *, op_col: str = "op", seq_col: str = "seq") -> None:
-        """LWW-merge a (op, seq, *cols) change batch into the table."""
-        incoming = changes.select(
-            *self.keys,
-            *[c for c in changes.columns if c not in {op_col, seq_col, *self.keys}],
-            F.col(seq_col).cast("long").alias("_seq"),
-            (F.col(op_col) == "delete").alias("_deleted"),
-        )
-        current = self.read_internal()
-        # allowMissingColumns: schema evolution support — a batch decoded
-        # under a NEWER schema version (added column) merges into an older
-        # table (old rows take NULL), and vice versa for dropped columns;
-        # type alignment covers MODIFY-column widening
-        # (A12 DDL-apply semantics at the sink).
-        union = (
-            incoming
-            if current is None
-            else _align_to_incoming(current, incoming).unionByName(
-                incoming, allowMissingColumns=True
-            )
-        )
-        merged = latest_by_key(union, self.keys, seq_col="_seq")
-        self._swap_write(merged)
-
-    def gc_tombstones(self, min_live_seq: int) -> None:
-        """Drop tombstones no longer reachable by redelivery (their seq
-        is below the source's committed low-water mark)."""
-        full = self.read_internal()
-        if full is None:
-            return
-        self._swap_write(full.filter(~(F.col("_deleted") & (F.col("_seq") < min_live_seq))))
-
-    RENAME_MARKER = "_last_rename.json"
-
-    def _rename_already_applied(self, stmt_id) -> bool:
-        import json
-
-        if stmt_id is None:
-            return False
-        p = os.path.join(self.path, self.RENAME_MARKER)
-        if not os.path.exists(p):
-            return False
-        with open(p) as f:
-            return json.load(f).get("stmt_id") == stmt_id
-
-    def rename_columns(
-        self,
-        mapping: dict[str, str],
-        *,
-        missing_ok: bool = False,
-        stmt_id=None,
-    ) -> None:
-        """Value-preserving column rename: the upstream RENAME COLUMN
-        applied to the local store, so historical rows keep their data
-        under the new name (a unionByName merge alone would strand the
-        old column and null the new one — the DROP+ADD failure).  One
-        full aligned rewrite (the rule MODIFY already charges — parquet
-        column names are physical, so unlike ADD there is no
-        metadata-only rename for a plain parquet dir).  Key
-        columns may be renamed — ``keys`` follows, and the bucketed
-        subclass's placement hashes VALUES, so no row moves.
-
-        The mapping applies SIMULTANEOUSLY (rename_plan.py — ADVICE r9
-        + the round-10 swap finding): identity retypes no-op,
-        freed-name chains like ``a→b; c→a`` apply, column SWAPS
-        ({a: b, b: a} from a legal 3-op ALTER) work, and with
-        ``missing_ok=True`` a column added-then-renamed before ever
-        materializing skips instead of raising.  Replay idempotence:
-        acyclic mappings are detected from the column set; a SWAP's
-        replay is not set-detectable, so ``stmt_id`` (the upstream DDL
-        row's seq) persists in a marker file STAGED with the rewrite
-        (atomic) and a matching replay returns untouched."""
-        from qin_cdc_spark.streaming.rename_plan import (
-            plan_renames,
-            rename_frame,
-        )
-
-        if self._rename_already_applied(stmt_id):
-            return
-        full = self.read_internal()
-        if full is None:
-            self.keys = [mapping.get(k, k) for k in self.keys]
-            return
-        applied = plan_renames(full.columns, mapping, missing_ok=missing_ok)
-        self.keys = [mapping.get(k, k) for k in self.keys]
-        if not applied:
-            return
-        import json
-
-        marker = None
-        if stmt_id is not None:
-            marker = {self.RENAME_MARKER: json.dumps({"stmt_id": stmt_id})}
-        self._swap_write(rename_frame(full, applied), stage_files=marker)
-
-    def _swap_write(self, df: DataFrame, *, stage_files: dict | None = None) -> None:
-        stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(stage)
-        for name, content in (stage_files or {}).items():
-            with open(os.path.join(stage, name), "w") as f:
-                f.write(content)
-        old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
-        # os.path.exists, not self.exists(): a dataless directory (empty
-        # first batch) must still be renamed away or the stage rename fails
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(stage, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-
-class BucketedUpsertTable(ParquetUpsertTable):
-    """Hash-bucketed variant: rows land in ``bucket=pmod(hash(pk), N)``
-    partitions and a merge rewrites ONLY the buckets touched by the
-    batch — per-batch cost scales with |batch keys| not |table|
-    (PLANS.md gap #1).  This is the parquet stand-in for what Delta/
-    Iceberg MERGE achieves with file-skipping on PK statistics; the
-    same hash-bucket layout also makes target-side joins co-located.
+    inputs/mysql/mysql_position.go:150-170).
 
     SCHEMA MANIFEST (VERDICT r8 #3): the table's logical schema lives
     in an engine-owned ``_table_schema.json`` beside the data, and
@@ -802,22 +630,43 @@ class BucketedUpsertTable(ParquetUpsertTable):
     aligned rewrite — parquet files are physically typed, and no
     declared schema can read an int file as a string.
 
-    Dynamic partition overwrite is per-partition, not transactional
-    across buckets (a crash mid-write can leave a batch half-applied);
-    replaying the batch converges because the merge is idempotent —
-    the same at-least-once contract as the rest of the engine.  The
-    manifest is crash-consistent the same way: full-dir rewrites stage
-    it inside the swap (atomic with the data); the ADD path flips it
-    after the bucket swaps, so a crash in between hides the new column
-    (a consistent pre-DDL view) until the replay heals it.
+    Writes are directory swaps (``pointer.swap``): one per touched
+    bucket on a merge, one of the whole table on a full rewrite.  They
+    are not transactional across buckets (a crash mid-merge can leave a
+    batch half-applied); replaying the batch converges because the
+    merge is idempotent — the same at-least-once contract as the rest
+    of the engine.  The manifest is crash-consistent the same way:
+    full-dir rewrites stage it inside the swap (atomic with the data);
+    the ADD path flips it after the bucket swaps, so a crash in between
+    hides the new column (a consistent pre-DDL view) until the replay
+    heals it.
     """
 
     BUCKET_COL = "_bucket"
     SCHEMA_NAME = "_table_schema.json"
+    RENAME_MARKER = "_last_rename.json"
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str], *, n_buckets: int = 32):
-        super().__init__(spark, path, keys)
+        self.spark = spark
+        self.path = path
+        self.keys = keys
         self.n_buckets = n_buckets
+
+    def exists(self) -> bool:
+        """True only if the table holds actual data files: an all-
+        quarantined (empty) first batch writes a directory with no
+        parquet parts, and reading that explodes with
+        UNABLE_TO_INFER_SCHEMA — treat it as not-yet-created so the
+        next merge takes the bootstrap path.  Repairs a crashed swap
+        first, so the at-least-once replay sees the pre-crash state
+        instead of a missing table or bucket."""
+        pointer.recover(self.path)
+        if not os.path.isdir(self.path):
+            return False
+        for _root, _dirs, files in os.walk(self.path):
+            if any(f.endswith(".parquet") for f in files):
+                return True
+        return False
 
     def _bucket_expr(self):
         return F.pmod(F.hash(*[F.col(k) for k in self.keys]), F.lit(self.n_buckets))
@@ -871,6 +720,7 @@ class BucketedUpsertTable(ParquetUpsertTable):
         return self._read_full().drop(self.BUCKET_COL)
 
     def read(self) -> DataFrame | None:
+        """Visible rows (tombstones and bookkeeping columns hidden)."""
         full = self.read_internal()
         if full is None:
             return None
@@ -890,6 +740,7 @@ class BucketedUpsertTable(ParquetUpsertTable):
         )
 
     def merge(self, changes: DataFrame, *, op_col: str = "op", seq_col: str = "seq") -> None:
+        """LWW-merge a (op, seq, *cols) change batch into the table."""
         incoming = changes.select(
             *self.keys,
             *[c for c in changes.columns if c not in {op_col, seq_col, *self.keys}],
@@ -976,21 +827,9 @@ class BucketedUpsertTable(ParquetUpsertTable):
             # pass and no in-place dynamic overwrite hazard
             stage = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
             merged.write.partitionBy(self.BUCKET_COL).parquet(stage)
-            prefix = f"{self.BUCKET_COL}="
-            touched = [
-                d[len(prefix):]
-                for d in os.listdir(stage)
-                if d.startswith(prefix)
-            ]
-            for b in touched:
-                src = os.path.join(stage, f"{self.BUCKET_COL}={b}")
-                dst = os.path.join(self.path, f"{self.BUCKET_COL}={b}")
-                old = f"{dst}.old-{uuid.uuid4().hex[:6]}"
-                if os.path.exists(dst):
-                    os.rename(dst, old)
-                os.rename(src, dst)
-                if os.path.exists(old):
-                    shutil.rmtree(old)
+            for d in os.listdir(stage):
+                if d.startswith(f"{self.BUCKET_COL}="):
+                    pointer.swap(os.path.join(stage, d), os.path.join(self.path, d))
             shutil.rmtree(stage, ignore_errors=True)
             if added:
                 # the O(delta) evolution flip: after the touched-bucket
@@ -1000,6 +839,74 @@ class BucketedUpsertTable(ParquetUpsertTable):
                 self._write_schema_manifest(evolved)
         finally:
             incoming.unpersist()
+
+    def gc_tombstones(self, min_live_seq: int) -> None:
+        """Drop tombstones no longer reachable by redelivery (their seq
+        is below the source's committed low-water mark)."""
+        full = self.read_internal()
+        if full is None:
+            return
+        self._swap_write(full.filter(~(F.col("_deleted") & (F.col("_seq") < min_live_seq))))
+
+    def _rename_already_applied(self, stmt_id) -> bool:
+        import json
+
+        if stmt_id is None:
+            return False
+        p = os.path.join(self.path, self.RENAME_MARKER)
+        if not os.path.exists(p):
+            return False
+        with open(p) as f:
+            return json.load(f).get("stmt_id") == stmt_id
+
+    def rename_columns(
+        self,
+        mapping: dict[str, str],
+        *,
+        missing_ok: bool = False,
+        stmt_id=None,
+    ) -> None:
+        """Value-preserving column rename: the upstream RENAME COLUMN
+        applied to the local store, so historical rows keep their data
+        under the new name (a unionByName merge alone would strand the
+        old column and null the new one — the DROP+ADD failure).  One
+        full aligned rewrite (the rule MODIFY already charges — parquet
+        column names are physical, so unlike ADD there is no
+        metadata-only rename for a plain parquet dir).  Key
+        columns may be renamed — ``keys`` follows, and the bucket
+        placement hashes VALUES, so no row moves.
+
+        The mapping applies SIMULTANEOUSLY (rename_plan.py — ADVICE r9
+        + the round-10 swap finding): identity retypes no-op,
+        freed-name chains like ``a→b; c→a`` apply, column SWAPS
+        ({a: b, b: a} from a legal 3-op ALTER) work, and with
+        ``missing_ok=True`` a column added-then-renamed before ever
+        materializing skips instead of raising.  Replay idempotence:
+        acyclic mappings are detected from the column set; a SWAP's
+        replay is not set-detectable, so ``stmt_id`` (the upstream DDL
+        row's seq) persists in a marker file STAGED with the rewrite
+        (atomic) and a matching replay returns untouched."""
+        from qin_cdc_spark.streaming.rename_plan import (
+            plan_renames,
+            rename_frame,
+        )
+
+        if self._rename_already_applied(stmt_id):
+            return
+        full = self.read_internal()
+        if full is None:
+            self.keys = [mapping.get(k, k) for k in self.keys]
+            return
+        applied = plan_renames(full.columns, mapping, missing_ok=missing_ok)
+        self.keys = [mapping.get(k, k) for k in self.keys]
+        if not applied:
+            return
+        import json
+
+        marker = None
+        if stmt_id is not None:
+            marker = {self.RENAME_MARKER: json.dumps({"stmt_id": stmt_id})}
+        self._swap_write(rename_frame(full, applied), stage_files=marker)
 
     def _swap_write(self, df: DataFrame, *, stage_files: dict | None = None) -> None:
         # keep the bucket layout on full rewrites (gc_tombstones path)
@@ -1014,12 +921,7 @@ class BucketedUpsertTable(ParquetUpsertTable):
         # below publishes both atomically (no stale-manifest window on
         # any full-rewrite path — bootstrap, MODIFY, rename, GC)
         self._write_schema_manifest(df.schema, dir_path=stage)
-        old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(stage, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        pointer.swap(stage, self.path)
 
 
 class CdcStreamRoute:
@@ -1035,7 +937,7 @@ class CdcStreamRoute:
         keys: list[str],
         target_path: str,
         transform=None,
-        n_buckets: int | None = DEFAULT_N_BUCKETS,
+        n_buckets: int = DEFAULT_N_BUCKETS,
         dlq_path: str | None = None,
         sink=None,
         versioned: bool = False,
@@ -1325,11 +1227,6 @@ class CdcStreamRoute:
                 # operator's (or the downstream relay's) job, exactly as
                 # in the reference (outputs execute no DDL themselves)
                 tgt = self.bind_target()
-                if not hasattr(tgt, "rename_columns"):
-                    raise NotImplementedError(
-                        f"column rename on a {type(tgt).__name__} target is "
-                        "not supported"
-                    )
                 if tgt.exists():
                     # missing_ok: a column ADDed and renamed within this
                     # same publication never materialized in the store —
@@ -1505,7 +1402,7 @@ class CdcStreamRoute:
             # durably tie the batch's upstream DDL to the version the
             # merge minted: emit_egress replays it verbatim over the
             # wire (ddl_between) instead of re-deriving a name-based
-            # diff.  Targets without a version ledger (flat/bucketed —
+            # diff.  A target without a version ledger (the flat store —
             # no egress by contract) just drop the queue; the diff
             # fallback covers any statement lost to a crash here.
             if hasattr(self.target, "attach_ddl"):
@@ -1519,11 +1416,7 @@ class CdcStreamRoute:
             if needs_hw
             else None
         )
-        if (
-            self.tombstone_gc_lag is not None
-            and hw is not None
-            and hasattr(self.target, "gc_tombstones")
-        ):
+        if self.tombstone_gc_lag is not None and hw is not None:
             self.target.gc_tombstones(int(hw) - self.tombstone_gc_lag)
         if self.history_expire_lag is not None and hw is not None:
             self.bind_history().expire_history(
@@ -1538,30 +1431,20 @@ class CdcStreamRoute:
         after the operator fixes the route (schema correction, DDL
         catch-up), the preserved evidence flows back through the normal
         decode → transform → merge path.  Rows that still fail stay
-        quarantined (the DLQ is rewritten to exactly the still-bad set,
-        staged-swap like the upsert tables).  Replay is idempotent:
+        quarantined (the DLQ is rewritten to exactly the still-bad set
+        by a ``pointer.swap``, like the target).  Replay is idempotent:
         applied rows merge LWW by seq, so re-running converges.
 
         Returns (applied, still_quarantined)."""
         if self.dlq_path is None:
             return (0, 0)
-        # crash-window recovery, mirroring ParquetUpsertTable._recover:
-        # swap died BETWEEN renames → only .old-* exists → restore it;
-        # swap COMPLETED but the crash hit before cleanup → live dir
-        # exists alongside stale .old-*/.stage-* siblings → drop them
-        # (they would otherwise accumulate forever across replays)
+        # repair a rewrite that crashed (the same swap recovery as the
+        # target's), and drop the stage dirs of rewrites that never
+        # swapped — they would otherwise accumulate across replays
+        pointer.recover(self.dlq_path)
         parent, name = os.path.split(self.dlq_path.rstrip("/"))
-        if parent and os.path.isdir(parent):
-            if not os.path.isdir(self.dlq_path):
-                olds = sorted(
-                    d for d in os.listdir(parent) if d.startswith(name + ".old-")
-                )
-                if olds:
-                    os.rename(os.path.join(parent, olds[-1]), self.dlq_path)
-            if os.path.isdir(self.dlq_path):
-                for d in os.listdir(parent):
-                    if d.startswith((name + ".old-", name + ".stage-")):
-                        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+        if os.path.isdir(parent or "."):
+            pointer.sweep(parent or ".", name + ".stage-", ())
         if not os.path.isdir(self.dlq_path):
             return (0, 0)
         quarantined = self.spark.read.parquet(self.dlq_path)
@@ -1601,10 +1484,7 @@ class CdcStreamRoute:
                 # if it fails, the quarantine is untouched)
                 stage = f"{self.dlq_path}.stage-{uuid.uuid4().hex[:8]}"
                 bad.write.parquet(stage)
-                old = f"{self.dlq_path}.old-{uuid.uuid4().hex[:8]}"
-                os.rename(self.dlq_path, old)
-                os.rename(stage, self.dlq_path)
-                shutil.rmtree(old, ignore_errors=True)
+                pointer.swap(stage, self.dlq_path)
             return (n_good, n_bad)
         finally:
             good.unpersist()
@@ -1643,14 +1523,14 @@ class CdcStreamRoute:
                 self.spark,
                 self.history_path,
                 keys=self.keys,
-                n_buckets=self.n_buckets or DEFAULT_N_BUCKETS,
+                n_buckets=self.n_buckets,
             )
         return self.history
 
     def bind_target(self):
         """Bind the target table lazily (so a transform can change the
         column set first).  One binding rule for apply AND read paths —
-        a bucketed target must never be read through the flat class."""
+        a versioned target must never be read through the flat class."""
         if self.target is None:
             if self.partition_col is not None:
                 from qin_cdc_spark.streaming.partitioned import (
@@ -1662,7 +1542,7 @@ class CdcStreamRoute:
                     self.target_path,
                     self.keys,
                     partition_col=self.partition_col,
-                    n_buckets=self.n_buckets or DEFAULT_N_BUCKETS,
+                    n_buckets=self.n_buckets,
                     table_opts=self.table_opts,
                 )
             elif self.versioned:
@@ -1672,15 +1552,13 @@ class CdcStreamRoute:
                     self.spark,
                     self.target_path,
                     self.keys,
-                    n_buckets=self.n_buckets or DEFAULT_N_BUCKETS,
+                    n_buckets=self.n_buckets,
                     **self.table_opts,
                 )
-            elif self.n_buckets:
+            else:
                 self.target = BucketedUpsertTable(
                     self.spark, self.target_path, self.keys, n_buckets=self.n_buckets
                 )
-            else:
-                self.target = ParquetUpsertTable(self.spark, self.target_path, self.keys)
         return self.target
 
 
@@ -1792,9 +1670,11 @@ def start_cdc_stream(
                     for route in routes:
                         if route.sink is None:
                             tgt = route.bind_target()
-                            # versioned targets keep history by design —
-                            # retention is gc(keep_last=…), not tombstone GC
-                            if tgt.exists() and hasattr(tgt, "gc_tombstones"):
+                            # every local target class drops its own
+                            # tombstones; a versioned one mints a version
+                            # for it and keeps its history (retention is
+                            # gc(keep_last=…))
+                            if tgt.exists():
                                 tgt.gc_tombstones(low)
             run_concurrently(
                 spark,

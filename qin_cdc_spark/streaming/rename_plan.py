@@ -1,5 +1,5 @@
 """Shared rename planner for the store-layer ``rename_columns``
-implementations (ParquetUpsertTable / VersionedBucketedTable — the
+implementations (BucketedUpsertTable / VersionedBucketedTable — the
 SCD2 and partitioned stores delegate to the versioned one), the
 derived-view state rewrites, and every frame-level rename alignment
 (decode segments, CDF boundary alignment).

@@ -645,6 +645,7 @@ class VersionedBucketedTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
+        pointer.recover(self._bloom_idx_path)  # append to the restored index
         out.coalesce(1).write.mode("append").parquet(self._bloom_idx_path)
 
     def read_where(self, col: str, values: list, version: int | None = None):
@@ -668,6 +669,7 @@ class VersionedBucketedTable:
         if not dirs:
             return self._visible(None)
         pred = F.col(col).isin(values)
+        pointer.recover(self._bloom_idx_path)
         if col not in self.bloom_cols or not os.path.isdir(self._bloom_idx_path):
             full = self._read_manifest(man)
             return self._visible(full.filter(pred)) if full is not None else None
@@ -698,6 +700,7 @@ class VersionedBucketedTable:
         version still references — stale rows from GC'd dirs are
         harmless for correctness (read_where intersects with the
         manifest) but accumulate; this is their expire step."""
+        pointer.recover(self._bloom_idx_path)
         if not os.path.isdir(self._bloom_idx_path):
             return
         meta = self._meta()
@@ -708,10 +711,7 @@ class VersionedBucketedTable:
         kept = idx.filter(F.col("unit").isin(list(live)))
         stage = f"{self._bloom_idx_path}.stage-{uuid.uuid4().hex[:8]}"
         kept.coalesce(1).write.parquet(stage)
-        old = f"{self._bloom_idx_path}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(self._bloom_idx_path, old)
-        os.rename(stage, self._bloom_idx_path)
-        shutil.rmtree(old, ignore_errors=True)
+        pointer.swap(stage, self._bloom_idx_path)
 
     def changes_between(
         self, v_from: int, v_to: int, *, include_preimage: bool = False
@@ -840,7 +840,7 @@ class VersionedBucketedTable:
     def gc_tombstones(self, min_live_seq: int) -> int:
         """Mint a new version with delete tombstones BELOW the source's
         redelivery low-water mark physically dropped — the versioned
-        analog of ParquetUpsertTable.gc_tombstones, and the missing
+        analog of BucketedUpsertTable.gc_tombstones, and the missing
         piece for a long-running CDC target (every delete and every
         RTBF purge otherwise leaves a tombstone row in its bucket
         FOREVER, inflating reads at 100 TB).

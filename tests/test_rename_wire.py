@@ -20,7 +20,6 @@ from qin_cdc_spark.cdc.envelope import ENVELOPE_SCHEMA, envelope_from_typed
 from qin_cdc_spark.streaming.cdc_stream import (
     BucketedUpsertTable,
     CdcStreamRoute,
-    ParquetUpsertTable,
     envelope_from_canal_egress,
 )
 from qin_cdc_spark.streaming.versioned import VersionedBucketedTable
@@ -98,17 +97,16 @@ def test_versioned_rename_key_column(spark, tmp_path):
 
 
 def test_flat_and_bucketed_target_rename(spark, tmp_path):
-    for cls, name in ((ParquetUpsertTable, "flat"), (BucketedUpsertTable, "b")):
-        tbl = cls(spark, str(tmp_path / name), ["k"])
-        tbl.merge(_old(spark, B1))
-        tbl.rename_columns({"v": "w"})
-        tbl.merge(_new(spark, B2))
-        got = {(r.k, r.w) for r in tbl.read().collect()}
-        assert got == {(1, "a2"), (2, "b"), (3, "c")}, name
-        # replay skip + loud unknown
-        tbl.rename_columns({"v": "w"})
-        with pytest.raises(ValueError, match="not found"):
-            tbl.rename_columns({"zz": "q"})
+    tbl = BucketedUpsertTable(spark, str(tmp_path / "b"), ["k"])
+    tbl.merge(_old(spark, B1))
+    tbl.rename_columns({"v": "w"})
+    tbl.merge(_new(spark, B2))
+    got = {(r.k, r.w) for r in tbl.read().collect()}
+    assert got == {(1, "a2"), (2, "b"), (3, "c")}
+    # replay skip + loud unknown
+    tbl.rename_columns({"v": "w"})
+    with pytest.raises(ValueError, match="not found"):
+        tbl.rename_columns({"zz": "q"})
 
 
 def test_route_segments_inband_ddl_at_its_seq(spark, tmp_path):
@@ -560,7 +558,7 @@ def test_freed_name_chain_applies_and_replays(spark, tmp_path):
     rejected by round-9's pre-rename-snapshot validation.  Both store
     shapes apply it in order, and a full replay of the same mapping
     no-ops instead of raising."""
-    flat = ParquetUpsertTable(spark, str(tmp_path / "flat"), ["k"])
+    flat = BucketedUpsertTable(spark, str(tmp_path / "flat"), ["k"])
     ver = VersionedBucketedTable(spark, str(tmp_path / "ver"), ["k"], n_buckets=4)
     rows = spark.createDataFrame(
         [("insert", 1, 1, "A", "C")], "op string, seq long, k long, a string, c string"

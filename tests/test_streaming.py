@@ -695,40 +695,197 @@ def test_incremental_rollup_equals_batch(spark, events_stream_dir, tmp_path):
     assert sorted(map(str, store.read().collect())) == sorted(map(str, before))
 
 
-def test_upsert_table_crash_window_recovery(spark, tmp_path):
-    """A swap that dies between its two renames leaves only the .old-*
-    copy (whole table, or one bucket dir).  The next read/merge must
-    restore it — otherwise an at-least-once replay merges against a
-    missing bucket and loses every key not in the replayed batch."""
-    import os as _os
-    import shutil as _shutil
+class _SwapUser:
+    """One store that commits by ``pointer.swap``: ``apply`` runs its
+    swapping write (and is the input a replay repeats), ``read`` is its
+    next read, ``dead`` is a live dir a crashed swap can leave only as
+    ``.old-*``, ``stale`` a live dir a completed swap can leave an
+    ``.old-*`` copy beside, and ``litter`` dirs the read must sweep."""
 
+    def __init__(self, apply, read, dead, stale, litter=()):
+        self.apply, self.read = apply, read
+        self.dead, self.stale, self.litter = dead, stale, list(litter)
+
+
+def _child(path, prefix, i=0):
+    return os.path.join(path, sorted(d for d in os.listdir(path) if d.startswith(prefix))[i])
+
+
+def _flat_user(spark, tmp_path, whole_table):
     from qin_cdc_spark.streaming.cdc_stream import BucketedUpsertTable
 
-    orders = load_table(spark, SF_SMOKE, "orders").limit(100)
-    changes = orders.withColumn("op", F.lit("insert")).withColumn(
-        "seq", F.col("o_orderkey")
+    tbl = BucketedUpsertTable(spark, str(tmp_path / "tbl"), ["k"], n_buckets=4)
+    changes = spark.createDataFrame(
+        [("insert", i, i, f"v{i}") for i in range(20)] + [("delete", 30, 3, None)],
+        "op string, seq long, k long, v string",
     )
-    tbl = BucketedUpsertTable(spark, str(tmp_path / "tbl"), ["o_orderkey"], n_buckets=4)
+
+    def read():
+        return sorted(map(tuple, tbl.read().collect()))
+
     tbl.merge(changes)
-    n = tbl.read().count()
+    dead = tbl.path if whole_table else _child(tbl.path, "_bucket=", 0)
+    return _SwapUser(lambda: tbl.merge(changes), read, dead, _child(tbl.path, "_bucket=", 1))
 
-    # simulate a bucket-level crash: dst renamed away, replacement never landed
-    bucket = next(d for d in _os.listdir(tbl.path) if d.startswith("_bucket="))
-    _os.rename(
-        _os.path.join(tbl.path, bucket), _os.path.join(tbl.path, bucket + ".old-dead")
+
+def _dlq_user(spark, tmp_path):
+    import pyspark.sql.types as T
+
+    from qin_cdc_spark.cdc.envelope import ENVELOPE_SCHEMA
+
+    rows = spark.createDataFrame(
+        [("insert", i, i, f"v{i}") for i in range(1, 6)],
+        "op string, seq long, k long, v string",
     )
-    assert tbl.read().count() == n  # recovered transparently
+    junk = spark.createDataFrame(
+        [("src", "t", "insert", 99, None, 1, "{not json", None)], ENVELOPE_SCHEMA
+    )
+    env = envelope_from_typed(rows, db="src", table="t").unionByName(junk)
+    fixed = rows.drop("op", "seq").schema
+    broken = T.StructType(  # pk parses null: every row quarantines
+        [T.StructField("k", T.ArrayType(T.LongType())), fixed["v"]]
+    )
+    dlq = str(tmp_path / "dlq")
+    route = CdcStreamRoute(
+        spark, db="src", table="t", schema=broken, keys=["k"],
+        target_path=str(tmp_path / "tbl"), n_buckets=4, dlq_path=dlq,
+    )
+    route.apply_batch(env, batch_id=0)
+    route.schema = fixed
+    assert route.replay_dlq() == (5, 1)  # the DLQ rewrite swaps once
 
-    # simulate a whole-table crash: live dir renamed away mid-swap
-    _os.rename(tbl.path, tbl.path + ".old-dead")
-    assert tbl.read().count() == n
+    def read():  # a DLQ's next read is the next replay
+        counts = route.replay_dlq()
+        tgt = sorted(map(tuple, route.bind_target().read().collect()))
+        return counts, tgt, spark.read.parquet(dlq).count()
 
-    # a COMPLETED swap's leftover .old dir is garbage, not a restore source
-    bucket_path = _os.path.join(tbl.path, bucket)
-    _shutil.copytree(bucket_path, bucket_path + ".old-stale")
-    assert tbl.read().count() == n
-    assert not _os.path.exists(bucket_path + ".old-stale")
+    return _SwapUser(route.replay_dlq, read, dlq, dlq, [dlq + ".stage-dead"])
+
+
+def _ivf_user(spark, tmp_path):
+    import json
+
+    from qin_cdc_spark.operators.ivf import IvfIndex
+
+    idx = IvfIndex(str(tmp_path / "ivf"))
+    os.makedirs(idx.path)
+    with open(f"{idx.path}/centroids.json", "w") as f:
+        json.dump([[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [0.0, -1.0]], f)
+    unit = [[1.0, 0.1], [0.1, 1.0], [-1.0, 0.1], [0.1, -1.0]]
+    idx.add_batch(
+        spark.createDataFrame(
+            [(i, unit[i % 4]) for i in range(12)], "vec_id long, embedding array<double>"
+        )
+    )
+    cdf = spark.createDataFrame(
+        [
+            (1, "update", unit[2], unit[1]),  # moves cluster 1 → 2
+            (4, "delete", None, unit[0]),
+            (100, "insert", unit[3], None),
+        ],
+        "vec_id long, _change string, embedding array<double>, _pre_embedding array<double>",
+    )
+
+    def read():
+        return sorted(
+            (r.vec_id, r.cluster, tuple(r.embedding)) for r in idx.corpus(spark).collect()
+        )
+
+    idx.apply_cdf(cdf)
+    corpus = f"{idx.path}/corpus"
+    return _SwapUser(
+        lambda: idx.apply_cdf(cdf), read, _child(corpus, "cluster=", 0),
+        _child(corpus, "cluster=", 1),
+    )
+
+
+def _lsh_user(spark, tmp_path):
+    from qin_cdc_spark.operators.lsh_index import LshBandIndex
+
+    idx = LshBandIndex(spark, str(tmp_path / "lsh"), n_buckets=4)
+    docs = [(i, f"doc {i} shares the quick brown fox words number {i}") for i in range(8)]
+    idx.build(spark.createDataFrame(docs, "doc_id long, text string"))
+    cdf = spark.createDataFrame(
+        [
+            (1, "update", "a wholly different text for doc one", docs[1][1]),
+            (2, "delete", None, docs[2][1]),
+            (100, "insert", "doc 100 shares the quick brown fox words", None),
+        ],
+        "doc_id long, _change string, text string, _pre_text string",
+    )
+
+    def read():
+        return sorted((r.doc_id, r.band, r.bucket) for r in idx.read().collect())
+
+    idx.apply_cdf(cdf)
+    return _SwapUser(
+        lambda: idx.apply_cdf(cdf), read, _child(idx.path, "bucket=", 0),
+        _child(idx.path, "bucket=", 1),
+    )
+
+
+def _bloom_idx_user(spark, tmp_path):
+    from qin_cdc_spark.streaming.versioned import VersionedBucketedTable
+
+    tbl = VersionedBucketedTable(
+        spark, str(tmp_path / "vt"), ["k"], n_buckets=4, bloom_cols=["c"]
+    )
+    for lo in (0, 10):
+        tbl.merge(
+            spark.createDataFrame(
+                [("insert", lo + i, i, f"c{lo + i}") for i in range(10)],
+                "op string, seq long, k long, c string",
+            )
+        )
+
+    def read():
+        rows = sorted(map(tuple, tbl.read_where("c", ["c3", "c15"]).collect()))
+        units = sorted(
+            r.unit for r in tbl.spark.read.parquet(tbl._bloom_idx_path).collect()
+        )
+        return rows, units
+
+    tbl.compact_bloom_index()
+    return _SwapUser(tbl.compact_bloom_index, read, tbl._bloom_idx_path, tbl._bloom_idx_path)
+
+
+_SWAP_USERS = {
+    "flat_bucket": lambda spark, tmp: _flat_user(spark, tmp, whole_table=False),
+    "flat_table": lambda spark, tmp: _flat_user(spark, tmp, whole_table=True),
+    "dlq": _dlq_user,
+    "ivf": _ivf_user,
+    "lsh": _lsh_user,
+    "bloom_idx": _bloom_idx_user,
+}
+
+
+@pytest.mark.parametrize("user", list(_SWAP_USERS))
+def test_swap_crash_residue_recovers(spark, tmp_path, user):
+    """Every ``pointer.swap`` user repairs what a crashed swap leaves
+    behind before its next read: a live dir that died between the two
+    renames (only its ``.old-*`` copy left) reads as before the crash,
+    a completed swap's leftover ``.old-*`` copy is deleted rather than
+    restored, and a replay of the same input converges.  Without the
+    repair an index reads ``cluster=N.old-*`` as a bogus partition and
+    an at-least-once replay merges against a missing bucket."""
+    import shutil
+
+    u = _SWAP_USERS[user](spark, tmp_path)
+    before = u.read()
+
+    os.rename(u.dead, u.dead + ".old-dead")  # died between its renames
+    assert u.read() == before
+    assert os.path.isdir(u.dead) and not os.path.exists(u.dead + ".old-dead")
+
+    shutil.copytree(u.stale, u.stale + ".old-stale")  # died before clean-up
+    for d in u.litter:
+        os.makedirs(d)
+    assert u.read() == before
+    assert not os.path.exists(u.stale + ".old-stale")
+    assert not any(os.path.exists(d) for d in u.litter)
+
+    u.apply()  # replay of the same input
+    assert u.read() == before
 
 
 def test_cdc_stream_in_stream_ddl_evolution(spark, tmp_path):
@@ -913,20 +1070,6 @@ def test_dlq_replay_after_schema_fix(spark, tmp_path):
     applied2, still_bad2 = route.replay_dlq()  # idempotent re-run
     assert (applied2, still_bad2) == (0, 1)
     assert route.target.read().count() == 20
-
-    # completed-swap crash window: live DLQ exists but a stale .old-* /
-    # .stage-* sibling survived the crash — the next replay must clean
-    # them up (and not resurrect the stale copy)
-    import os as _os
-
-    dlq = str(tmp_path / "dlq")
-    _os.makedirs(dlq + ".old-deadbeef")
-    _os.makedirs(dlq + ".stage-deadbeef")
-    applied3, still_bad3 = route.replay_dlq()
-    assert (applied3, still_bad3) == (0, 1)
-    assert not _os.path.exists(dlq + ".old-deadbeef")
-    assert not _os.path.exists(dlq + ".stage-deadbeef")
-    assert spark.read.parquet(dlq).count() == 1
 
 
 def test_tombstone_gc_in_stream(spark, tmp_path):
