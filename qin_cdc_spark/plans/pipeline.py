@@ -141,8 +141,9 @@ class Pipeline:
             )
 
         # compile [[materialized-views]] blocks (engine extension): each
-        # is a derived view rooted under <target_root>/_mv/<name>,
-        # refreshed inside every micro-batch via the post_batch hook
+        # is a derived view rooted under <target_root>/_mv/<name>, bound
+        # to its route, which refreshes it inside every micro-batch as
+        # soon as the store it reads has landed
         from qin_cdc_spark.streaming.mviews import build_materialized_view
 
         self.mviews: dict[str, tuple[CdcStreamRoute, object]] = {}
@@ -175,6 +176,7 @@ class Pipeline:
                     os.path.join(target_root, "_mv", m.name),
                     n_buckets=int(m.config.get("n-buckets", 32)),
                 )
+                route.history_views.append(mv)
             else:
                 mv = build_materialized_view(
                     spark,
@@ -182,6 +184,7 @@ class Pipeline:
                     m.mv_type,
                     m.config,
                 )
+                route.target_views.append(mv)
             self.mviews[m.name] = (route, mv)
             # wire-relayed column renames on the route propagate to the
             # declared view's spec AND state before its next refresh
@@ -233,34 +236,28 @@ class Pipeline:
         explicit trigger, the config's batch-interval-ms applies
         (availableNow fallback when the config sets none).
 
-        Each micro-batch runs in three steps: the routes apply
-        concurrently, then every declared view refreshes concurrently,
-        then the coordinator records the batch.  A step waits for all
-        of its calls; if one raised, the micro-batch fails with the
-        first error after the rest have returned, and the restart from
-        the checkpoint replays the batch (a landed store skips it by its
-        batch guard or re-merges it idempotently; views catch up from
-        their applied version).  See ``cdc_stream.run_concurrently``."""
+        Each micro-batch is a set of dependency chains, not a sequence
+        of barriers.  The routes apply concurrently; inside each route
+        the history and the target land concurrently, and every
+        declared view refreshes as soon as the store it reads has
+        landed (``CdcStreamRoute.apply_batch``).  The coordinator then
+        records the batch.  Every level waits for all of its calls; if
+        one raised, the micro-batch fails with the first error after
+        the rest have returned, and the restart from the checkpoint
+        replays the batch (a landed store skips it by its batch guard or
+        re-merges it idempotently; views catch up from their applied
+        version).  See ``cdc_stream.run_concurrently``."""
         if trigger is None:
             trigger = self.trigger_config()
-        hooks = []
-        if self.mviews:
-            hooks.append(self._refresh_mviews)
+        post_batch = None
         if self.coordinator is not None:
-            # record AFTER derived views refresh: the coordinate marks
-            # "this batch fully landed everywhere"
+            # record AFTER every route (and its views) landed: the
+            # coordinate marks "this batch fully landed everywhere"
             c = self.config.coordinator
-            hooks.append(
-                self.coordinator.post_batch_hook(
-                    retain_batches=int(c.get("retain-batches", 0)),
-                    gc_every=int(c.get("gc-every", 1)),
-                )
+            post_batch = self.coordinator.post_batch_hook(
+                retain_batches=int(c.get("retain-batches", 0)),
+                gc_every=int(c.get("gc-every", 1)),
             )
-
-        def post_batch(batch_id: int) -> None:
-            for h in hooks:
-                h(batch_id)
-
         return start_cdc_stream(
             self.spark,
             envelope_stream,
@@ -270,19 +267,7 @@ class Pipeline:
             # in-stream DDL: op='ddl' envelope rows evolve the registry and
             # every route's decode schema mid-stream (A11+A12 end to end)
             registry=self.registry,
-            post_batch=post_batch if hooks else None,
-        )
-
-    def _refresh_mviews(self, batch_id: int) -> None:
-        # views read only their route's landed store: none waits on
-        # another, so they refresh concurrently
-        run_concurrently(
-            self.spark,
-            [
-                functools.partial(mv.refresh, route.target)
-                for route, mv in self.mviews.values()
-                if route.target is not None and route.target.exists()
-            ],
+            post_batch=post_batch,
         )
 
     def read_mview(self, name: str):
@@ -313,8 +298,6 @@ class Pipeline:
                 for route in self.routes
             ],
         )
-        if self.mviews:
-            self._refresh_mviews(-1)
 
     def read_target(self, target_schema: str, target_table: str) -> DataFrame | None:
         for route, router in zip(self.routes, self.config.routers):

@@ -981,10 +981,12 @@ class CdcStreamRoute:
         # (streaming/scd2.py) from the SAME decoded batches the target
         # consumes — event-grain validity intervals, which a CDF-driven
         # consumer cannot reconstruct (the CDF nets out intermediate
-        # versions within a batch).  Crash between the target merge and
-        # the history merge is safe: each store has its own batch-id
-        # replay guard, so the redelivered batch no-ops on whichever
-        # side already applied and folds into the other.
+        # versions within a batch).  The history and the target apply
+        # concurrently (neither reads the other), so a failure or crash
+        # can land one store's batch and not the other's.  That is safe:
+        # each store has its own batch-id replay guard, so the
+        # redelivered batch no-ops on whichever side already applied
+        # and folds into the other.
         self.history_path = history_path
         self.history = None
         # partition_col: the target becomes a PartitionedVersionedTable
@@ -1052,6 +1054,12 @@ class CdcStreamRoute:
         # fences store/listener re-mutation on replayed batches — a
         # SWAP rename's replay is not detectable from the column set
         self._applied_rename_stmts: set = set()
+        # views bound to this route (the pipeline's declared views):
+        # each refreshes inside apply_batch as soon as the store it
+        # reads has landed — history views get no source (they bind
+        # their history at construction), target views get the target
+        self.history_views: list = []
+        self.target_views: list = []
 
     def _malformed_pred(self):
         """Rows whose ``data`` cannot decode to a keyed row under the
@@ -1367,37 +1375,72 @@ class CdcStreamRoute:
         batch_id: int | None = None,
         ddl_rows: list | None = None,
     ) -> None:
+        """Apply one micro-batch: decode it (segmented at in-band DDL),
+        then run the route's two store branches concurrently
+        (``run_concurrently``):
+
+        * history: the SCD2 apply, then ``expire_history``, then the
+          views that read the history;
+        * target: the merge (or the remote sink), DDL attachment and
+          tombstone GC, then egress and the views that read the target,
+          concurrently.
+
+        Neither branch reads the other's store, so each store's
+        consumers start as soon as that store lands.  Every level waits
+        for all of its calls before re-raising the first error, so a
+        failing branch never leaves another store mid-write, and the
+        replay meets each store landed (its batch guard skips it) or
+        untouched."""
         if ddl_rows:
             decoded = self._decode_evolving(env_batch, ddl_rows, batch_id)
         else:
             decoded = self._decode_slice(env_batch)
         if self.transform is not None:
             decoded = self.transform(decoded)
+        hw = None
+        if self.tombstone_gc_lag is not None or self.history_expire_lag is not None:
+            # the batch's seq high-water mark, shared by both branches'
+            # retention steps
+            hw = decoded.agg(F.max(F.col("seq").cast("long"))).first()[0]
+        branches = [functools.partial(self._apply_target, decoded, batch_id, hw)]
         if self.history_path is not None:
-            # history wants the RAW event grain (pre-reduction): two
-            # same-key events in one batch are two dimension versions
-            self.bind_history().apply_batch(decoded, batch_id=batch_id)
-        # The merge itself reduces last-event-per-key (A27 analog) over
-        # (current ∪ batch) — feeding it the raw decoded batch costs one
-        # shuffle total instead of reduce-then-merge's two.
-        reduced = decoded
+            branches.insert(
+                0, functools.partial(self._apply_history, decoded, batch_id, hw)
+            )
+        run_concurrently(self.spark, branches)
+
+    def _apply_history(self, decoded: DataFrame, batch_id, hw) -> None:
+        # history wants the RAW event grain (pre-reduction): two
+        # same-key events in one batch are two dimension versions
+        history = self.bind_history()
+        history.apply_batch(decoded, batch_id=batch_id)
+        if self.history_expire_lag is not None and hw is not None:
+            history.expire_history(int(hw) - self.history_expire_lag)
+        run_concurrently(
+            self.spark, [functools.partial(_refresh, mv) for mv in self.history_views]
+        )
+
+    def _apply_target(self, decoded: DataFrame, batch_id, hw) -> None:
         if self.sink is not None:
             # Remote sinks get the batch REDUCED to its last event per key
             # (A27): rows post from unordered partitions, so two same-key
             # events in one batch could otherwise land at the target in
             # the wrong order.  After reduction keys are disjoint and any
             # posting order is correct; cross-batch order is the stream's.
-            self.sink(latest_by_key(reduced, self.keys))
+            self.sink(latest_by_key(decoded, self.keys))
             return
-        self.bind_target()
+        # The merge itself reduces last-event-per-key (A27 analog) over
+        # (current ∪ batch) — feeding it the raw decoded batch costs one
+        # shuffle total instead of reduce-then-merge's two.
+        target = self.bind_target()
         if self.partition_col is not None:
-            self.target.merge(reduced, batch_id=batch_id)
+            target.merge(decoded, batch_id=batch_id)
             if self.partition_keep_latest is not None:
-                self.target.retain_latest(self.partition_keep_latest)
+                target.retain_latest(self.partition_keep_latest)
         elif self.versioned:
-            self.target.merge(reduced, batch_id=batch_id)
+            target.merge(decoded, batch_id=batch_id)
         else:
-            self.target.merge(reduced)
+            target.merge(decoded)
         if self._pending_ddl:
             # durably tie the batch's upstream DDL to the version the
             # merge minted: emit_egress replays it verbatim over the
@@ -1405,25 +1448,17 @@ class CdcStreamRoute:
             # diff.  A target without a version ledger (the flat store —
             # no egress by contract) just drop the queue; the diff
             # fallback covers any statement lost to a crash here.
-            if hasattr(self.target, "attach_ddl"):
-                self.target.attach_ddl(self._pending_ddl)
+            if hasattr(target, "attach_ddl"):
+                target.attach_ddl(self._pending_ddl)
             self._pending_ddl = []
-        needs_hw = self.tombstone_gc_lag is not None or (
-            self.history_expire_lag is not None
-        )
-        hw = (
-            reduced.agg(F.max(F.col("seq").cast("long"))).first()[0]
-            if needs_hw
-            else None
-        )
         if self.tombstone_gc_lag is not None and hw is not None:
-            self.target.gc_tombstones(int(hw) - self.tombstone_gc_lag)
-        if self.history_expire_lag is not None and hw is not None:
-            self.bind_history().expire_history(
-                int(hw) - self.history_expire_lag
-            )
-        if self.egress_format is not None:
-            self.emit_egress()
+            target.gc_tombstones(int(hw) - self.tombstone_gc_lag)
+        readers = [self.emit_egress] if self.egress_format is not None else []
+        if self.target_views and target.exists():
+            readers += [
+                functools.partial(_refresh, mv, target) for mv in self.target_views
+            ]
+        run_concurrently(self.spark, readers)
 
     def replay_dlq(self) -> tuple[int, int]:
         """Re-attempt quarantined envelope rows under the route's
@@ -1562,12 +1597,19 @@ class CdcStreamRoute:
         return self.target
 
 
+def _refresh(view, *source) -> None:
+    # ``view.refresh`` is looked up per call, not bound when the view
+    # attaches, so a refresh wrapped after compile still takes effect
+    view.refresh(*source)
+
+
 def run_concurrently(spark: SparkSession, calls: list) -> None:
     """Run independent zero-argument calls at once — the concurrent
     stages of the reference's pipeline (app/server.go:158-166) applied
-    to one micro-batch's routes, or to its views once every route has
-    landed.  Each call's Spark jobs run side by side on the shared
-    executors, so the batch costs its slowest call instead of the sum.
+    to one micro-batch's routes, to a route's history and target
+    branches, and to the readers of a store that has just landed.  Each
+    call's Spark jobs run side by side on the shared executors, so the
+    step costs its slowest call instead of the sum.
 
     Error contract: every call runs to completion before this returns;
     then the first failed call's error (in list order) is re-raised, so
@@ -1605,11 +1647,15 @@ def start_cdc_stream(
     route (per-table grouping, A21 analog — each route filters its own
     (db, table) slice of the batch).  The routes apply CONCURRENTLY
     (``run_concurrently``): no route reads another's store, so the
-    batch's store work costs its slowest route.  A route that raises
-    fails the micro-batch only after every other route has returned;
-    the restart replays the batch, which each landed store's batch
-    guard (or its idempotent LWW merge) absorbs.  ``post_batch`` runs
-    after every route has landed.
+    batch's store work costs its slowest route.  Inside a route the
+    history and target branches run concurrently too, and each store's
+    bound views refresh as soon as that store lands
+    (``CdcStreamRoute.apply_batch``) — there is no barrier between
+    routes and views.  A route that raises fails the micro-batch only
+    after every other route has returned; the restart replays the
+    batch, which each landed store's batch guard (or its idempotent LWW
+    merge) absorbs.  ``post_batch`` runs after every route (and so
+    every bound view) has landed.
 
     With a ``registry``, ``op='ddl'`` control rows are applied to it (in
     seq order, batch-id idempotent) BEFORE the DML fan-out, and each
@@ -1688,10 +1734,10 @@ def start_cdc_stream(
                     for route in routes
                 ],
             )
-            # downstream maintenance (derived MVs, index refresh) runs
-            # INSIDE the micro-batch, after every route applied: a crash
-            # replays the whole batch and both the LWW merge and any
-            # version-guarded consumer (DerivedAggTable.refresh,
+            # caller-wired maintenance (index refresh, the coordinator)
+            # runs INSIDE the micro-batch, after every route applied: a
+            # crash replays the whole batch and both the LWW merge and
+            # any version-guarded consumer (DerivedAggTable.refresh,
             # IvfIndex.apply_cdf driven off changes_between) converge.
             if post_batch is not None:
                 post_batch(batch_id)

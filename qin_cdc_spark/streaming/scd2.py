@@ -905,11 +905,12 @@ class ScdHistoryStatsMV:
         self._source = _HistoryStatsSource(scd.store)
 
     def refresh(self, source=None) -> int:
-        """Fold the history CDF since the last applied version.  The
-        ``source`` argument is accepted-and-ignored for protocol parity
-        with the derived-view family (the pipeline's mview hook passes
-        the route TARGET; this view's source is the bound history
-        store, fixed at construction).
+        """Fold the history CDF since the last applied version.  This
+        view's source is the bound history store, fixed at
+        construction: the route refreshes it as a history view, with no
+        source, right after the history lands.  ``source`` stays an
+        optional, ignored argument so the view still answers the
+        derived-view family's ``refresh(source)`` call.
 
         The source's retention floor records BEFORE the state flip
         (ADVICE r8): the two writes aren't atomic, and a crash between

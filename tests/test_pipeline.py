@@ -853,49 +853,154 @@ group-cols = ["grp"]
 sum-cols = ["val"]
 """
 
+# FANOUT_CONFIG with the trickle chain's shape on route a: SCD2 history,
+# canal egress, and a view on each of its two stores
+CHAIN_CONFIG = """
+name = "chain"
 
-@pytest.mark.parametrize("failing", ["route", "view"])
+[input]
+type = "mysql"
+
+[output]
+type = "starrocks"
+
+[[output.config.routers]]
+source-schema = "src"
+source-table = "a"
+history = true
+egress-format = "canal"
+
+[[output.config.routers]]
+source-schema = "src"
+source-table = "b"
+
+[[materialized-views]]
+name = "a_by_grp"
+type = "keyed-agg"
+source-schema = "src"
+source-table = "a"
+[materialized-views.config]
+group-cols = ["grp"]
+sum-cols = ["val"]
+
+[[materialized-views]]
+name = "a_versions"
+type = "scd2-stats"
+source-schema = "src"
+source-table = "a"
+"""
+
+# (op, seq, id, grp, val) on src.a and (op, seq, id, name) on src.b,
+# one list per micro-batch
+FANOUT_A_ROWS = [
+    [("insert", i, i, "g%d" % (i % 2), i * 10) for i in range(1, 7)],
+    [("update", 20, 1, "g1", 99), ("delete", 21, 2, "g0", 20),
+     ("insert", 22, 30, "g0", 5)],
+]
+FANOUT_B_ROWS = [
+    [("insert", 100 + i, i, "n%d" % i) for i in range(1, 5)],
+    [("update", 200, 1, "m1"), ("delete", 201, 3, "n3")],
+]
+
+
+def _fanout_envelope(spark, batch: int):
+    a = spark.createDataFrame(
+        FANOUT_A_ROWS[batch], "op string, seq long, id long, grp string, val long"
+    )
+    b = spark.createDataFrame(
+        FANOUT_B_ROWS[batch], "op string, seq long, id long, name string"
+    )
+    return envelope_from_typed(
+        a.select("id", "grp", "val", "op", "seq"), db="src", table="a"
+    ).unionByName(
+        envelope_from_typed(b.select("id", "name", "op", "seq"), db="src", table="b")
+    )
+
+
+def _compile_fanout(spark, cfg: str, target_root: str):
+    from pyspark.sql.types import _parse_datatype_string
+
+    return compile_pipeline(
+        spark,
+        cfg,
+        schemas={
+            ("src", "a"): _parse_datatype_string("id long, grp string, val long"),
+            ("src", "b"): _parse_datatype_string("id long, name string"),
+        },
+        primary_keys={("src", "a"): ["id"], ("src", "b"): ["id"]},
+        target_root=target_root,
+        n_buckets=4,
+    )
+
+
+def _lww(batches, width):
+    state = {}
+    for op, _, k, *vals in sorted(
+        (r for bt in batches for r in bt), key=lambda r: r[1]
+    ):
+        if op == "delete":
+            state.pop(k, None)
+        else:
+            state[k] = tuple(vals[:width])
+    return state
+
+
+def _group_sums(live: dict) -> dict:
+    out: dict = {}
+    for grp, val in live.values():
+        cnt, s = out.get(grp, (0, 0))
+        out[grp] = (cnt + 1, s + val)
+    return out
+
+
+def _scd2_versions(batches) -> dict:
+    """(id, valid_from) -> (valid_to, grp, val): every non-delete event
+    opens a version that the key's next event closes."""
+    by_key: dict = {}
+    for op, seq, k, grp, val in sorted(
+        (r for bt in batches for r in bt), key=lambda r: (r[2], r[1])
+    ):
+        by_key.setdefault(k, []).append((op, seq, grp, val))
+    out = {}
+    for k, evs in by_key.items():
+        for i, (op, seq, grp, val) in enumerate(evs):
+            if op != "delete":
+                nxt = evs[i + 1][1] if i + 1 < len(evs) else None
+                out[(k, seq)] = (nxt, grp, val)
+    return out
+
+
+def _scd2_stats(versions: dict) -> dict:
+    """id -> (n_entries, n_closed, dwell, n_open) over the versions."""
+    out: dict = {}
+    for (k, vf), (vt, _, _) in versions.items():
+        n, closed, dwell, n_open = out.get(k, (0, 0, 0, 0))
+        if vt is None:
+            out[k] = (n + 1, closed, dwell, n_open + 1)
+        else:
+            out[k] = (n + 1, closed + 1, dwell + vt - vf, n_open)
+    return out
+
+
+@pytest.mark.parametrize("failing", ["route", "view", "history"])
 def test_fanout_fails_after_every_call_and_restart_converges(
     spark, tmp_path, failing
 ):
-    """Routes, and then views, apply concurrently.  When one call raises
-    once, the micro-batch fails only after the other calls have
-    returned, no pool thread outlives the batch, and a restart from the
-    same checkpoint lands both targets and the view equal to the
+    """Routes, each route's history and target branches, and the views
+    on each store apply concurrently.  When one call raises once, the
+    micro-batch fails only after the other calls have returned, no pool
+    thread outlives the batch, and a restart from the same checkpoint
+    lands both targets, the history and every view equal to the
     oracle."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    a_rows = [
-        [("insert", i, i, "g%d" % (i % 2), i * 10) for i in range(1, 7)],
-        [("update", 20, 1, "g1", 99), ("delete", 21, 2, "g0", 20),
-         ("insert", 22, 30, "g0", 5)],
-    ]
-    b_rows = [
-        [("insert", 100 + i, i, "n%d" % i) for i in range(1, 5)],
-        [("update", 200, 1, "m1"), ("delete", 201, 3, "n3")],
-    ]
+    cfg = CHAIN_CONFIG if failing == "history" else FANOUT_CONFIG
     env_dir = str(tmp_path / "envelope")
-    for ab, bb in zip(a_rows, b_rows):
-        a = spark.createDataFrame(ab, "op string, seq long, id long, grp string, val long")
-        b = spark.createDataFrame(bb, "op string, seq long, id long, name string")
-        envelope_from_typed(
-            a.select("id", "grp", "val", "op", "seq"), db="src", table="a"
-        ).unionByName(
-            envelope_from_typed(b.select("id", "name", "op", "seq"), db="src", table="b")
-        ).coalesce(1).write.mode("append").parquet(env_dir)
+    for batch in range(len(FANOUT_A_ROWS)):
+        _fanout_envelope(spark, batch).coalesce(1).write.mode("append").parquet(
+            env_dir
+        )
 
     def compile_():
-        return compile_pipeline(
-            spark,
-            FANOUT_CONFIG,
-            schemas={
-                ("src", "a"): _parse_datatype_string("id long, grp string, val long"),
-                ("src", "b"): _parse_datatype_string("id long, name string"),
-            },
-            primary_keys={("src", "a"): ["id"], ("src", "b"): ["id"]},
-            target_root=str(tmp_path / "targets"),
-            n_buckets=4,
-        )
+        return _compile_fanout(spark, cfg, str(tmp_path / "targets"))
 
     def run(pipe):
         return pipe.run_stream(
@@ -928,9 +1033,12 @@ def test_fanout_fails_after_every_call_and_restart_converges(
     if failing == "route":
         route_b.apply_batch = fail_once(route_b.apply_batch)
         route_a.apply_batch = slow(route_a.apply_batch, "a")
-    else:
+    elif failing == "view":
         mv = pipe.mviews["a_by_grp"][1]
         mv.refresh = fail_once(mv.refresh)
+    else:
+        history = route_a.bind_history()
+        history.apply_batch = fail_once(history.apply_batch)
     q = run(pipe)
     with pytest.raises(StreamingQueryException, match="injected failure"):
         q.awaitTermination(300)
@@ -939,10 +1047,22 @@ def test_fanout_fails_after_every_call_and_restart_converges(
         assert returned == ["raised", "a"]
         assert route_a.target.current_version() == 1
     else:
-        # both routes landed batch 0 before the view step ran
+        # both routes landed batch 0 before the failure surfaced
         assert returned == ["raised"]
         assert pipe.read_target("src", "a").count() == 6
         assert pipe.read_target("src", "b").count() == 4
+    if failing == "history":
+        # the target's branch ran to its end: egress and the target's
+        # view landed batch 0; the history and its view did not
+        from qin_cdc_spark.streaming.cdc_stream import egress_hwm
+
+        assert egress_hwm(route_a.egress_dir) == route_a.target.current_version()
+        got_mv = {
+            r.grp: (r.cnt, r.sum_val) for r in pipe.read_mview("a_by_grp").collect()
+        }
+        assert got_mv == _group_sums(_lww(FANOUT_A_ROWS[:1], 2))
+        assert route_a.history.read_history() is None
+        assert pipe.read_mview("a_versions") is None
     assert not [t for t in threading.enumerate() if t.name.startswith("qin-fanout")]
 
     # restart from the same checkpoint: the failed batch replays
@@ -951,26 +1071,90 @@ def test_fanout_fails_after_every_call_and_restart_converges(
     assert q.awaitTermination(300)
     assert q.exception() is None
 
-    def lww(batches, width):
-        state = {}
-        for op, _, k, *vals in sorted(
-            (r for bt in batches for r in bt), key=lambda r: r[1]
-        ):
-            if op == "delete":
-                state.pop(k, None)
-            else:
-                state[k] = tuple(vals[:width])
-        return state
-
-    want_a, want_b = lww(a_rows, 2), lww(b_rows, 1)
+    want_a, want_b = _lww(FANOUT_A_ROWS, 2), _lww(FANOUT_B_ROWS, 1)
     got_a = {r.id: (r.grp, r.val) for r in pipe.read_target("src", "a").collect()}
     got_b = {r.id: (r.name,) for r in pipe.read_target("src", "b").collect()}
     assert (got_a, got_b) == (want_a, want_b)
-    want_mv: dict = {}
-    for grp, val in want_a.values():
-        cnt, s = want_mv.get(grp, (0, 0))
-        want_mv[grp] = (cnt + 1, s + val)
     got_mv = {
         r.grp: (r.cnt, r.sum_val) for r in pipe.read_mview("a_by_grp").collect()
     }
-    assert got_mv == want_mv
+    assert got_mv == _group_sums(want_a)
+    if failing == "history":
+        want_hist = _scd2_versions(FANOUT_A_ROWS)
+        got_hist = {
+            (r.id, r.valid_from): (r.valid_to, r.grp, r.val)
+            for r in pipe.read_history("src", "a").collect()
+        }
+        assert got_hist == want_hist
+        got_stats = {
+            r.id: (r.n_entries, r.n_closed, r.dwell, r.n_open)
+            for r in pipe.read_mview("a_versions").collect()
+        }
+        assert got_stats == _scd2_stats(want_hist)
+
+
+@pytest.mark.parametrize("waiter", ["route", "history"])
+def test_views_start_when_their_store_lands(spark, tmp_path, waiter):
+    """A view refreshes as soon as the store it reads has landed, not
+    after every store of the batch: ``[route]`` holds route b's apply
+    until route a's target view has refreshed, ``[history]`` holds
+    route a's history apply until the same view (which reads the
+    target) has refreshed.  With a barrier between stores and views,
+    the held call times out."""
+    pipe = _compile_fanout(spark, CHAIN_CONFIG, str(tmp_path / "targets"))
+    route_a, route_b = pipe.routes
+    mv = pipe.mviews["a_by_grp"][1]
+    refreshed = threading.Event()
+    waits = []
+
+    def set_after(fn):
+        def call(*args, **kwargs):
+            fn(*args, **kwargs)
+            refreshed.set()
+
+        return call
+
+    def wait_before(fn):
+        def call(*args, **kwargs):
+            waits.append(refreshed.wait(timeout=60))
+            return fn(*args, **kwargs)
+
+        return call
+
+    mv.refresh = set_after(mv.refresh)
+    if waiter == "route":
+        route_b.apply_batch = wait_before(route_b.apply_batch)
+    else:
+        history = route_a.bind_history()
+        history.apply_batch = wait_before(history.apply_batch)
+    pipe.run_batch(_fanout_envelope(spark, 0))
+    assert waits == [True]
+    assert pipe.read_target("src", "b").count() == 4
+    assert route_a.history.read_history().count() == 6
+
+
+# Spark jobs of the second batch of test_chain_batch_job_count under
+# the earlier two-barrier micro-batch (every route, then every view);
+# the per-store dependency chains run the same jobs, only sooner
+CHAIN_BATCH_JOBS = 54
+
+
+def test_chain_batch_job_count(spark, tmp_path):
+    """One trickle-shaped batch (history, canal egress, a keyed-agg and
+    an scd2-stats view on route a; a plain route b) through
+    ``Pipeline.run_batch`` runs no more Spark jobs than the two-barrier
+    micro-batch did."""
+    from tests.conftest import count_jobs
+
+    pipe = _compile_fanout(spark, CHAIN_CONFIG, str(tmp_path / "targets"))
+    pipe.run_batch(_fanout_envelope(spark, 0))
+    n = count_jobs(spark, pipe.run_batch, _fanout_envelope(spark, 1))
+    assert n <= CHAIN_BATCH_JOBS
+    want_a = _lww(FANOUT_A_ROWS, 2)
+    got_a = {r.id: (r.grp, r.val) for r in pipe.read_target("src", "a").collect()}
+    assert got_a == want_a
+    got_stats = {
+        r.id: (r.n_entries, r.n_closed, r.dwell, r.n_open)
+        for r in pipe.read_mview("a_versions").collect()
+    }
+    assert got_stats == _scd2_stats(_scd2_versions(FANOUT_A_ROWS))
